@@ -38,6 +38,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
+from .control import SNAPSHOT_MODES
 from .engine import SyncConfig
 from .sinks.state import RunState
 from .streaming.bounded import BoundedStreamConfig
@@ -51,9 +52,6 @@ _LOAD_TYPES = {
     "append_incremental": ("APPEND", True),
     "append_full": ("APPEND", False),
 }
-
-_SNAPSHOT_MODES = {"initial", "initial_only", "snapshot_only", "never",
-                   "schema_only", "schema_only_recovery", "when_needed"}
 
 _BINARY_MODES = {"hex", "base64", "base64-url-safe", "bytes"}
 
@@ -116,7 +114,7 @@ def parse_component_config(src: str | dict) -> ComponentConfig:
     if load_type not in _LOAD_TYPES:
         raise ValueError(f"unknown load_type {load_type!r}")
     snapshot_mode = sync.get("snapshot_mode", "initial")
-    if snapshot_mode not in _SNAPSHOT_MODES:
+    if snapshot_mode not in SNAPSHOT_MODES:
         raise ValueError(f"unknown snapshot_mode {snapshot_mode!r}")
     handle_binary = sync.get("handle_binary", "hex")
     if handle_binary not in _BINARY_MODES:

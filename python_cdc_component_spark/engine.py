@@ -432,8 +432,7 @@ def sync_multi(spark: SparkSession, events: DataFrame, out_dir: str,
             write_csv(result, path)
         else:
             write_parquet(result, path)
-        write_manifest(merged, path + ".manifest",
-                       incremental=cfg.incremental)
+        _write_table_manifest(merged, path + ".manifest", cfg)
 
         bounds = result.agg(
             F.max(SC.EVENT_TIMESTAMP_MS).alias("ts"),

@@ -27,19 +27,34 @@ not history.
 
 from __future__ import annotations
 
-import os.path
+import functools
+import hashlib
+import json
+import os
 import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQueryListener
+from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
+from ..control import SNAPSHOT_MODES
+from ..fs import fs_exists
 from ..model.envelope import OP_SNAPSHOT_READ, SYSTEM_COLUMNS as SC
 from ..sinks.merge import MergeCompactor
 from ..sources.events import (
     EVENTS_RAW_SCHEMA, PAYLOAD_COLS, _op_expr, ts_to_ns_factor,
 )
+
+# live drains poll the source for new files at this interval
+_POLL_INTERVAL_MS = 250
+# ``_epochs`` markers kept behind the current epoch (the lexical
+# index's fixed horizon; the ANN index's default, which
+# ``BoundedStreamConfig.ann_marker_retain`` overrides)
+_MARKER_RETAIN = 64
+# ANN compaction-debt gate: data files per estimated index directory
+# before a fold — also the per-cell threshold that fold applies
+_ANN_COMPACT_FILES = 8
 
 
 @dataclass
@@ -56,11 +71,11 @@ class BoundedStreamConfig:
     num_state_buckets: int = 32                # MERGE-sink hash buckets
     # live=False: Trigger.AvailableNow — drain to the end captured at
     # start, then stop (P6, the reference's bounded run). live=True:
-    # keep polling for NEW files arriving mid-run (the reference's
-    # long-running engine loop, AbstractDebeziumTask.java:116) until the
-    # idle timeout or max duration fires.
+    # keep polling (every _POLL_INTERVAL_MS) for NEW files arriving
+    # mid-run (the reference's long-running engine loop,
+    # AbstractDebeziumTask.java:116) until the idle timeout or max
+    # duration fires.
     live: bool = False
-    poll_interval_ms: int = 250
     # SnapshotMode parity on the stream path (control.resolve_snapshot_mode
     # semantics): the "is this the initial run" signal is checkpoint
     # existence. 'never' on a fresh checkpoint degrades to schema-only
@@ -107,13 +122,12 @@ class BoundedStreamConfig:
     ann_vec_id_col: str = "user_id"
     ann_vec_col: str = "props"
     ann_index_cells: int = 8
-    ann_compact_threshold: int = 8
     # epoch markers older than (current − retain) are pruned — replays
     # only ever target batches after the stream's last committed
     # checkpoint, and a pruned-then-replayed epoch converges anyway
     # (purge-then-add is idempotent); without pruning one empty marker
     # file accretes one per batch forever (ADVICE r10)
-    ann_marker_retain: int = 64
+    ann_marker_retain: int = _MARKER_RETAIN
     # every N epochs, retrain the quantizer over the CURRENT corpus
     # (IvfVectorIndex.rebuild: kmeans_fit + crash-safe sibling swap) —
     # the maintenance window for the codebook-never-moves-on-ingest
@@ -153,8 +167,6 @@ class BoundedStreamConfig:
     lexical_doc_id_col: str = "user_id"
     lexical_text_col: str = "props"
     lexical_parts: int = 16
-    lexical_compact_threshold: int = 8
-    lexical_marker_retain: int = 64
     # positional postings (1-based pos_list per (doc, term) row) —
     # the phrase-search layout; pinned in the index meta at first
     # build, BM25 reads ignore it
@@ -193,11 +205,12 @@ class _IdleStopListener(StreamingQueryListener):
     exceeds ``max_wait_s`` (reference ``AbstractDebeziumTask.java:171-183``
     idle check, gated off during snapshot)."""
 
-    def __init__(self, phase: dict | None = None):
+    def __init__(self):
         self.last_data_ts = time.time()
         self.busy = False
-        self.phase = phase      # shared snapshot-phase gate (T3)
-        self.query_id = None    # bound per-query for fleet runs
+        # snapshot-phase gate (T3), shared with the drain's live sink
+        self.phase = {"snapshot_active": False}
+        self.query_id = None    # bound to its drain's query at start
 
     def bind(self, query_id) -> None:
         """Restrict this listener to ONE query's events. Listeners are
@@ -226,27 +239,16 @@ class _IdleStopListener(StreamingQueryListener):
             # snapshot phase is over (clears the gate even though
             # foreachBatch is not invoked for empty batches)
             self.busy = False
-            if self.phase is not None:
-                self.phase["snapshot_active"] = False
+            self.phase["snapshot_active"] = False
 
     def onQueryIdle(self, event):
         if not self._mine(event.id):
             return
         self.busy = False
-        if self.phase is not None:
-            self.phase["snapshot_active"] = False
+        self.phase["snapshot_active"] = False
 
     def onQueryTerminated(self, event):
         pass
-
-
-def _compact(spark: SparkSession, batch_df: DataFrame,
-             compactor: MergeCompactor) -> None:
-    """DEDUPE-mode foreachBatch: keyed upsert of the micro-batch into the
-    bucketed compacted state (same W1 operator as batch mode, applied
-    incrementally). Per-batch I/O is proportional to the batch's touched
-    buckets, never the whole table — see ``sinks.merge``."""
-    compactor.merge(spark, batch_df.drop("_snapshot_phase"))
 
 
 def _run_side_epoch(spark: SparkSession, *, done, extract, on_empty,
@@ -285,11 +287,8 @@ def _run_side_epoch(spark: SparkSession, *, done, extract, on_empty,
 def _epoch_done(spark: SparkSession, state_path: str, epoch: int) -> bool:
     """Exactly-once probe for ``_epochs``-marker side states (ANN /
     lexical): True iff this epoch's marker is committed."""
-    import os as _os
-
-    from ..fs import fs_exists
-    return fs_exists(spark, _os.path.join(state_path, "_epochs",
-                                          str(epoch)))
+    return fs_exists(spark, os.path.join(state_path, "_epochs",
+                                         str(epoch)))
 
 
 def _epoch_commit(spark: SparkSession, state_path: str, epoch: int,
@@ -299,14 +298,12 @@ def _epoch_commit(spark: SparkSession, state_path: str, epoch: int,
     the batches after the stream's last committed checkpoint, so
     markers far behind are dead weight — and a pruned-then-replayed
     epoch converges anyway (purge-then-add is idempotent)."""
-    import os as _os
-
     from ..fs import fs_delete, fs_list_names, fs_touch
-    fs_touch(spark, _os.path.join(state_path, "_epochs", str(epoch)))
-    edir = _os.path.join(state_path, "_epochs")
+    fs_touch(spark, os.path.join(state_path, "_epochs", str(epoch)))
+    edir = os.path.join(state_path, "_epochs")
     for name in fs_list_names(spark, edir):
         if name.isdigit() and int(name) < epoch - retain:
-            fs_delete(spark, _os.path.join(edir, name))
+            fs_delete(spark, os.path.join(edir, name))
 
 
 def _data_file_debt(spark: SparkSession, state_path: str) -> int:
@@ -316,12 +313,10 @@ def _data_file_debt(spark: SparkSession, state_path: str) -> int:
     per epoch forever and are NOT data debt — counting them would
     eventually trip the gate every epoch with nothing left to fold,
     ADVICE r10)."""
-    import os as _os
-
     from ..fs import fs_total_file_count
     return (fs_total_file_count(spark, state_path)
-            - fs_total_file_count(spark, _os.path.join(state_path,
-                                                       "_epochs")))
+            - fs_total_file_count(spark, os.path.join(state_path,
+                                                      "_epochs")))
 
 
 def _maintain_dedup_groups(spark: SparkSession, groups,
@@ -355,9 +350,7 @@ def _maintain_dedup_groups(spark: SparkSession, groups,
     tier and returns (the side-state family convention) — a replayed
     empty epoch skips at the marker probe instead of re-running the
     gate aggregate."""
-    import os as _os
-
-    from ..fs import fs_exists, fs_read_text, fs_touch
+    from ..fs import fs_read_text, fs_touch
     from ..operators.dedup import dedup_latest
 
     mode = fs_read_text(spark, groups._tier_mode_path)
@@ -437,13 +430,13 @@ def _maintain_dedup_groups(spark: SparkSession, groups,
         # pins first so an empty first batch cannot leave a manifest
         # on a store with no recorded scheme.
         groups._set_tier_mode(spark, "cdc" if mode == "cdc" else "cdc3")
-        fs_touch(spark, _os.path.join(groups._manifest_path,
-                                      str(ingest_tier)))
+        fs_touch(spark, os.path.join(groups._manifest_path,
+                                     str(ingest_tier)))
 
     def _work(latest: DataFrame) -> None:
         groups._set_tier_mode(spark, "cdc" if mode == "cdc" else "cdc3")
-        purge_marker = _os.path.join(groups._manifest_path,
-                                     str(stride * epoch))
+        purge_marker = os.path.join(groups._manifest_path,
+                                    str(stride * epoch))
         if not fs_exists(spark, purge_marker):
             # purge every batch-touched id: replaced versions and
             # tombstones lose their old bands/claims; never-indexed
@@ -479,7 +472,7 @@ def _maintain_dedup_groups(spark: SparkSession, groups,
 
     _run_side_epoch(
         spark,
-        done=lambda: fs_exists(spark, _os.path.join(
+        done=lambda: fs_exists(spark, os.path.join(
             groups._manifest_path, str(ingest_tier))),
         extract=lambda: dedup_latest(batch_df.drop("_snapshot_phase"),
                                      id_cols),
@@ -498,7 +491,7 @@ def _maintain_ann_index(spark: SparkSession, idx, batch_df: DataFrame,
     writes the ``_vecmap`` sidecar BEFORE the cell rows — the append's
     discovery anchor, the mirror of the purge's cells-before-sidecar
     order) and the add then re-indexes cleanly."""
-    from ..fs import fs_exists, fs_touch
+    from ..fs import fs_touch
     from ..operators.dedup import dedup_latest
 
     idc, vc = cfg.ann_vec_id_col, cfg.ann_vec_col
@@ -531,9 +524,8 @@ def _maintain_ann_index(spark: SparkSession, idx, batch_df: DataFrame,
             # _epochs markers)
             est_dirs = idx.n_cells + idx.num_map_parts
             if (_data_file_debt(spark, cfg.ann_index_path)
-                    > cfg.ann_compact_threshold * est_dirs):
-                idx.compact_cells(
-                    spark, file_threshold=cfg.ann_compact_threshold)
+                    > _ANN_COMPACT_FILES * est_dirs):
+                idx.compact_cells(spark, file_threshold=_ANN_COMPACT_FILES)
             # scheduled retraining: a codebook pinned at epoch 0 skews
             # as the corpus drifts; rebuild is crash-safe (sibling
             # swap) and maintenance-idempotent — a replayed epoch just
@@ -590,7 +582,7 @@ def _maintain_semantic_groups(spark: SparkSession, st, batch_df: DataFrame,
     impossible by write order (bloom unions live ids before the index
     writes; replays re-union). Results are identical either way
     (parity-tested)."""
-    from ..fs import fs_exists, fs_touch
+    from ..fs import fs_touch
     from ..operators.dedup import dedup_latest
 
     ingest_marker = os.path.join(st.groups._manifest_path,
@@ -757,10 +749,9 @@ def _maintain_lexical_index(spark: SparkSession, lex, batch_df: DataFrame,
         # estimate (shared helper: recursive count minus markers)
         est_dirs = 3 * lex.num_parts
         if (_data_file_debt(spark, cfg.lexical_index_path)
-                > cfg.lexical_compact_threshold * est_dirs):
+                > lex.compact_file_threshold * est_dirs):
             lex.compact(spark)
-        _epoch_commit(spark, cfg.lexical_index_path, epoch,
-                      cfg.lexical_marker_retain)
+        _epoch_commit(spark, cfg.lexical_index_path, epoch, _MARKER_RETAIN)
 
     _run_side_epoch(
         spark,
@@ -771,184 +762,272 @@ def _maintain_lexical_index(spark: SparkSession, lex, batch_df: DataFrame,
         work=_work)
 
 
+def _check_side_states(cfg: BoundedStreamConfig,
+                       table: str | None = None) -> None:
+    """Reject side state a drain cannot maintain, before anything is
+    read. Every side state mirrors the table's CURRENT state (latest
+    version per key), which only DEDUPE mode maintains. A fused fleet
+    table (``table`` set) may carry only the lexical and ANN indexes:
+    maintained views, text dedup groups and semantic groups are
+    per-table state."""
+    who = "" if table is None else f"table {table!r}: "
+    if table is not None:
+        for kind, configured in (
+                ("maintained views", cfg.view_path or cfg.view_group_keys),
+                ("dedup-groups side state", cfg.dedup_groups_path),
+                ("semantic-groups side state", cfg.semantic_groups_path)):
+            if configured:
+                raise ValueError(
+                    f"{who}{kind}: per-table state, not supported on the "
+                    "fused fleet path — run that table through "
+                    "bounded_sync")
+    if cfg.mode.upper() != "DEDUPE":
+        for name in ("dedup_groups_path", "ann_index_path",
+                     "semantic_groups_path", "lexical_index_path"):
+            if getattr(cfg, name):
+                raise ValueError(
+                    f"{who}{name} requires DEDUPE mode — the side state "
+                    "mirrors the table's CURRENT state (latest version "
+                    "per key), which APPEND mode does not maintain")
+
+
+def _stream_snapshot_mode(spark: SparkSession, stream: DataFrame,
+                          snapshot_mode: str,
+                          checkpoint_dir: str) -> tuple[DataFrame, str]:
+    """Snapshot-mode dispatch, stream flavor (batch twin:
+    ``control.resolve_snapshot_mode`` in ``engine.sync``). The initial
+    run is the one with no committed checkpoint; ``never`` on it
+    degrades to schema-only recovery. Schema-only recovery consumes
+    (and checkpoints) every present file of the INITIAL contact and
+    emits no rows — "the actual sync starts next execution".
+    Post-initial, every mode streams changes normally, like Debezium
+    with stored offsets: filtering then would checkpoint past events
+    without emitting them (ADVICE r4, medium: silent data loss every
+    run). Returns the gated stream and the effective mode."""
+    if snapshot_mode not in SNAPSHOT_MODES:
+        raise ValueError(f"unknown snapshot_mode {snapshot_mode!r}; "
+                         f"expected one of {SNAPSHOT_MODES}")
+    # Hadoop FS probe: the checkpoint may be a URI (file://, hdfs://)
+    initial = not fs_exists(spark, os.path.join(checkpoint_dir, "commits"))
+    effective = snapshot_mode
+    if initial and snapshot_mode == "never":
+        effective = "schema_only"
+    if initial and effective in ("schema_only", "schema_only_recovery"):
+        stream = stream.filter(F.lit(False))
+    return stream, effective
+
+
+def _merge_keys(stream: DataFrame, primary_keys, prefix=()) -> list[str]:
+    """Compaction key of a DEDUPE drain: ``prefix`` plus the primary
+    keys. No-PK parity with the batch path (dedup_latest_no_pk,
+    reference component.py:406-408): without primary keys the key is
+    every non-system column, collapsing exact-duplicate payloads — NOT
+    a fixture default that would merge distinct payloads sharing one
+    column."""
+    if not primary_keys:
+        system = set(SC.ingest_names) | {"_table", "_snapshot_phase"}
+        primary_keys = [c for c in stream.columns if c not in system]
+    return [*prefix, *primary_keys]
+
+
+def _side_maintainers(cfg: BoundedStreamConfig,
+                      compactor: MergeCompactor) -> list:
+    """The side-state maintainers one table's cfg configures, in run
+    order: each ``fn(spark, batch_df, epoch)`` runs one epoch of its
+    ``_maintain_*`` driver against a state handle built here, once per
+    drain."""
+    out = []
+    if cfg.dedup_groups_path:
+        from .dedup_state import StreamingDedupGroups
+        groups = StreamingDedupGroups(cfg.dedup_groups_path,
+                                      num_buckets=cfg.dedup_groups_buckets)
+        out.append(lambda s, b, e: _maintain_dedup_groups(
+            s, groups, compactor, b, e, cfg))
+    if cfg.ann_index_path:
+        from ..operators.llm.annindex import IvfVectorIndex
+        ann = IvfVectorIndex(cfg.ann_index_path, n_cells=cfg.ann_index_cells)
+        out.append(lambda s, b, e: _maintain_ann_index(s, ann, b, e, cfg))
+    if cfg.semantic_groups_path:
+        from .semantic_state import StreamingSemanticGroups
+        sem = StreamingSemanticGroups(cfg.semantic_groups_path,
+                                      n_cells=cfg.semantic_cells,
+                                      threshold=cfg.semantic_threshold,
+                                      num_buckets=cfg.semantic_buckets)
+        out.append(lambda s, b, e: _maintain_semantic_groups(
+            s, sem, b, e, cfg))
+    if cfg.lexical_index_path:
+        from .lexical_state import StreamingLexicalIndex
+        lex = StreamingLexicalIndex(cfg.lexical_index_path,
+                                    num_parts=cfg.lexical_parts,
+                                    positions=cfg.lexical_positions)
+        out.append(lambda s, b, e: _maintain_lexical_index(
+            s, lex, b, e, cfg))
+    return out
+
+
+@dataclass
+class _Drain:
+    """One started drain query with its bound idle-stop listener."""
+
+    query: StreamingQuery
+    listener: _IdleStopListener
+    max_wait_s: float
+
+    def idle(self) -> bool:
+        """T2(b): no input rows for ``max_wait_s``, the last trigger was
+        not busy, and no snapshot phase is open (T3). A long-running
+        micro-batch emits no progress events until it completes, so
+        the live trigger status is consulted last: an in-flight batch
+        is "busy", not "idle" (the reference's ``taskState ==
+        RUNNING`` guard in AbstractDebeziumTask)."""
+        lis = self.listener
+        if (lis.busy or lis.phase["snapshot_active"]
+                or time.time() - lis.last_data_ts <= self.max_wait_s):
+            return False
+        try:
+            return not self.query.status.get("isTriggerActive")
+        except Exception:
+            return True
+
+
+def _start_drain(spark: SparkSession, stream: DataFrame, out_path: str,
+                 checkpoint_dir: str, cfg: BoundedStreamConfig, *,
+                 compactor: MergeCompactor | None = None, view=None,
+                 side=(), partition_by: str | None = None) -> _Drain:
+    """Start one drain query — stream → sink → checkpoint → trigger —
+    with an idle-stop listener bound to it (listeners are
+    session-global; an unbound one would reset its idle clock on any
+    concurrent query's progress).
+
+    A DEDUPE drain (``compactor`` set) upserts each micro-batch into the
+    bucketed compacted state — the same W1 operator as batch mode,
+    applied incrementally, with per-batch I/O proportional to the
+    touched buckets (see ``sinks.merge``) — or, with a maintained
+    ``view``, updates the view around that merge. It then runs each
+    ``side`` maintainer ``(table, fn)`` over its table's slice of the
+    batch (``table`` None: the whole batch). An APPEND drain writes the
+    stream as parquet under ``out_path``. A live drain polls for new
+    files every ``_POLL_INTERVAL_MS``; a bounded one drains under
+    ``Trigger.AvailableNow``."""
+    listener = _IdleStopListener()
+    if compactor is not None:
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            if cfg.live:
+                # T3 gate: while the latest micro-batch still carried
+                # snapshot (op='r') rows the idle stop must not fire
+                # (reference AbstractDebeziumTask.java:176-178). A
+                # limit(1) probe; AvailableNow terminates on its own.
+                listener.phase["snapshot_active"] = not (
+                    batch_df.filter(F.col("_snapshot_phase")).isEmpty())
+            rows = batch_df.drop("_snapshot_phase")
+            if view is not None:
+                view.update(spark, compactor, rows)
+            else:
+                compactor.merge(spark, rows)
+            for table, maintain in side:
+                part = batch_df if table is None else (
+                    batch_df.filter(F.col("_table") == table).drop("_table"))
+                maintain(spark, part, int(batch_id))
+
+        writer = stream.writeStream.foreachBatch(sink)
+    else:
+        writer = stream.drop("_snapshot_phase").writeStream.format("parquet")
+        if partition_by:
+            writer = writer.partitionBy(partition_by)
+        writer = writer.option("path", out_path)
+    writer = writer.option("checkpointLocation", checkpoint_dir)
+    if cfg.live:
+        writer = writer.trigger(
+            processingTime=f"{_POLL_INTERVAL_MS} milliseconds")
+    else:
+        writer = writer.trigger(availableNow=True)
+    spark.streams.addListener(listener)
+    try:
+        query = writer.start()
+    except BaseException:
+        spark.streams.removeListener(listener)
+        raise
+    listener.bind(query.id)
+    return _Drain(query, listener, cfg.max_wait_s)
+
+
+def _drive_drains(drains: list[_Drain], max_duration_s: float) -> list[str]:
+    """Poll started drains to termination and return each one's stop
+    reason: ``drained``, ``max_duration`` (a wall clock shared by all,
+    from the first pass) or ``idle_timeout`` (:meth:`_Drain.idle`). The
+    idle stop guards AvailableNow drains too. One pass waits about a
+    second in all, split across the pending drains, so a single drain
+    consults its query status at most once a second."""
+    start = time.time()
+    reasons = ["drained"] * len(drains)
+    pending = list(range(len(drains)))
+    while pending:
+        wait = 1.0 / len(pending)
+        still = []
+        for i in pending:
+            query = drains[i].query
+            if not query.isActive or query.awaitTermination(wait):
+                continue
+            if time.time() - start > max_duration_s:
+                reasons[i] = "max_duration"
+            elif drains[i].idle():
+                reasons[i] = "idle_timeout"
+            else:
+                still.append(i)
+                continue
+            query.stop()
+        pending = still
+    for d in drains:
+        d.query.awaitTermination()
+    return reasons
+
+
+def _close_drains(spark: SparkSession, drains: list[_Drain]) -> None:
+    """Stop any drain still running (an error path) and drop the
+    listeners."""
+    for d in drains:
+        if d.query.isActive:
+            d.query.stop()
+        spark.streams.removeListener(d.listener)
+
+
 def bounded_sync(spark: SparkSession, events_dir: str, out_path: str,
                  checkpoint_dir: str,
                  cfg: BoundedStreamConfig | None = None) -> dict:
-    """Run one bounded sync over the event stream.
+    """Run one bounded sync over the event stream: the single-drain
+    case of :func:`bounded_sync_multi_fused`'s drive loop.
 
     ``Trigger.AvailableNow`` drains everything present at start then
     stops (P6 semantics); the wall-clock and idle stops guard the drain
     like the reference's poll loop. Returns run stats.
     """
     cfg = cfg or BoundedStreamConfig()
-    if cfg.dedup_groups_path and cfg.mode.upper() != "DEDUPE":
-        raise ValueError(
-            "dedup_groups_path requires DEDUPE mode — APPEND mode has "
-            "no compacted current state to verify against")
-    if cfg.ann_index_path and cfg.mode.upper() != "DEDUPE":
-        raise ValueError(
-            "ann_index_path requires DEDUPE mode — the index mirrors "
-            "the table's CURRENT state (latest version per key), which "
-            "APPEND mode does not maintain")
-    if cfg.semantic_groups_path and cfg.mode.upper() != "DEDUPE":
-        raise ValueError(
-            "semantic_groups_path requires DEDUPE mode — the groups "
-            "mirror the table's CURRENT state (latest version per "
-            "key), which APPEND mode does not maintain")
-    if cfg.lexical_index_path and cfg.mode.upper() != "DEDUPE":
-        raise ValueError(
-            "lexical_index_path requires DEDUPE mode — the postings "
-            "mirror the table's CURRENT state (latest version per "
-            "key), which APPEND mode does not maintain")
-    stream = read_event_stream(spark, events_dir, cfg.max_files_per_trigger)
-
-    # snapshot-mode dispatch (stream flavor; batch twin in engine.sync).
-    # initial run == no committed checkpoint yet.
-    import os as _os
-    is_initial = not _os.path.exists(_os.path.join(checkpoint_dir, "commits"))
-    effective = cfg.snapshot_mode
-    if is_initial and cfg.snapshot_mode == "never":
-        effective = "schema_only"
-    if is_initial and effective in ("schema_only", "schema_only_recovery"):
-        # INITIAL contact only: consume (and checkpoint) every present
-        # file, emit no rows — "the actual sync starts next execution".
-        # Post-initial (checkpoint committed), schema_only streams
-        # changes normally, exactly like Debezium with stored offsets —
-        # filtering here would checkpoint past events without emitting
-        # them (ADVICE r4, medium: silent data loss every run).
-        stream = stream.filter(F.lit(False))
-
-    # T3: snapshot-phase gate — while the most recent micro-batch still
-    # carried snapshot (op='r') rows, the idle stop must not fire
-    # (reference AbstractDebeziumTask.java:176-178 gates `ended` on the
-    # snapshot notification being closed). The listener clears the gate
-    # on an empty trigger (source drained → snapshot over), so the flag
-    # cannot latch True forever when foreachBatch stops being invoked.
-    phase = {"snapshot_active": False}
-    listener = _IdleStopListener(phase)
-    spark.streams.addListener(listener)
+    _check_side_states(cfg)
+    stream, effective = _stream_snapshot_mode(
+        spark, read_event_stream(spark, events_dir, cfg.max_files_per_trigger),
+        cfg.snapshot_mode, checkpoint_dir)
+    compactor, view, side = None, None, []
+    if cfg.mode.upper() == "DEDUPE":
+        keys = _merge_keys(stream, cfg.primary_keys)
+        compactor = MergeCompactor(out_path, keys, cfg.num_state_buckets)
+        if cfg.view_path and cfg.view_group_keys:
+            from .view_maintain import StreamingAggView
+            view = StreamingAggView(cfg.view_path, keys,
+                                    cfg.view_group_keys, cfg.view_measure)
+        side = [(None, fn) for fn in _side_maintainers(cfg, compactor)]
+    drain = _start_drain(spark, stream, out_path, checkpoint_dir, cfg,
+                         compactor=compactor, view=view, side=side)
     try:
-        if cfg.mode.upper() == "DEDUPE":
-            keys = list(cfg.primary_keys)
-            if not keys:
-                # no-PK parity with the batch path (dedup_latest_no_pk,
-                # reference component.py:406-408): key = every
-                # non-system column, collapsing exact-duplicate
-                # payloads — NOT a fixture default that would merge
-                # distinct payloads sharing one column.
-                system = set(SC.ingest_names) | {"_table",
-                                                 "_snapshot_phase"}
-                keys = [c for c in stream.columns if c not in system]
-            compactor = MergeCompactor(out_path, keys,
-                                       cfg.num_state_buckets)
-            view = None
-            if cfg.view_path and cfg.view_group_keys:
-                from .view_maintain import StreamingAggView
-                view = StreamingAggView(cfg.view_path, keys,
-                                        cfg.view_group_keys,
-                                        cfg.view_measure)
-            groups = None
-            if cfg.dedup_groups_path:
-                from .dedup_state import StreamingDedupGroups
-                groups = StreamingDedupGroups(
-                    cfg.dedup_groups_path,
-                    num_buckets=cfg.dedup_groups_buckets)
-            ann_idx = None
-            if cfg.ann_index_path:
-                from ..operators.llm.annindex import IvfVectorIndex
-                ann_idx = IvfVectorIndex(cfg.ann_index_path,
-                                         n_cells=cfg.ann_index_cells)
-            sem = None
-            if cfg.semantic_groups_path:
-                from .semantic_state import StreamingSemanticGroups
-                sem = StreamingSemanticGroups(
-                    cfg.semantic_groups_path,
-                    n_cells=cfg.semantic_cells,
-                    threshold=cfg.semantic_threshold,
-                    num_buckets=cfg.semantic_buckets)
-            lex = None
-            if cfg.lexical_index_path:
-                from .lexical_state import StreamingLexicalIndex
-                lex = StreamingLexicalIndex(
-                    cfg.lexical_index_path,
-                    num_parts=cfg.lexical_parts,
-                    compact_file_threshold=cfg.lexical_compact_threshold,
-                    positions=cfg.lexical_positions)
-
-            def sink(batch_df: DataFrame, batch_id: int) -> None:
-                if cfg.live:
-                    # limit(1) probe; only the live path needs the gate
-                    # (AvailableNow terminates on its own)
-                    phase["snapshot_active"] = not (
-                        batch_df.filter(F.col("_snapshot_phase")).isEmpty())
-                if view is not None:
-                    view.update(spark, compactor,
-                                batch_df.drop("_snapshot_phase"))
-                else:
-                    _compact(spark, batch_df, compactor)
-                if groups is not None:
-                    _maintain_dedup_groups(spark, groups, compactor,
-                                           batch_df, int(batch_id),
-                                           cfg)
-                if ann_idx is not None:
-                    _maintain_ann_index(spark, ann_idx, batch_df,
-                                        int(batch_id), cfg)
-                if sem is not None:
-                    _maintain_semantic_groups(spark, sem, batch_df,
-                                              int(batch_id), cfg)
-                if lex is not None:
-                    _maintain_lexical_index(spark, lex, batch_df,
-                                            int(batch_id), cfg)
-
-            writer = stream.writeStream.foreachBatch(sink)
-        else:
-            writer = (stream.drop("_snapshot_phase")
-                      .writeStream.format("parquet")
-                      .option("path", out_path))
-
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-        if cfg.live:
-            writer = writer.trigger(
-                processingTime=f"{cfg.poll_interval_ms} milliseconds")
-        else:
-            writer = writer.trigger(availableNow=True)
-        query = writer.start()
-
-        start = time.time()
-        stopped_reason = "drained"
-        while query.isActive:
-            if query.awaitTermination(1.0):
-                break
-            elapsed = time.time() - start
-            if elapsed > cfg.max_duration_s:
-                stopped_reason = "max_duration"
-                query.stop()
-                break
-            # A long-running micro-batch emits no progress events until
-            # it completes — consult the live trigger status so an
-            # in-flight first batch is "busy", not "idle" (reference's
-            # `taskState == RUNNING` guard in AbstractDebeziumTask).
-            try:
-                trigger_active = bool(query.status.get("isTriggerActive"))
-            except Exception:
-                trigger_active = False
-            if (not listener.busy
-                    and not trigger_active
-                    and not phase["snapshot_active"]
-                    and time.time() - listener.last_data_ts > cfg.max_wait_s):
-                stopped_reason = "idle_timeout"
-                query.stop()
-                break
-        query.awaitTermination()
-        progress = query.lastProgress
-        return {
-            "stopped_reason": stopped_reason,
-            "batches": progress["batchId"] + 1 if progress else 0,
-            "sink_path": out_path,
-            "snapshot_mode_effective": effective,
-        }
+        [stopped_reason] = _drive_drains([drain], cfg.max_duration_s)
     finally:
-        spark.streams.removeListener(listener)
+        _close_drains(spark, [drain])
+    progress = drain.query.lastProgress
+    return {
+        "stopped_reason": stopped_reason,
+        "batches": progress["batchId"] + 1 if progress else 0,
+        "sink_path": out_path,
+        "snapshot_mode_effective": effective,
+    }
 
 
 def _fleet_group_key(spark: SparkSession, events_dir: str,
@@ -959,7 +1038,7 @@ def _fleet_group_key(spark: SparkSession, events_dir: str,
     Grouping on (schema, mode, keys) alone and then reading the rest
     of the config from the group's first table silently dropped
     per-table differences in snapshot_mode / num_state_buckets /
-    max_files_per_trigger / live-poll settings, breaking the
+    max_files_per_trigger / live / idle settings, breaking the
     documented bit-identical parity with per-table ``bounded_sync``
     (e.g. one table ``snapshot_mode='never'``, another ``'initial'``
     in the same group). ``max_duration_s`` stays fleet-shared by
@@ -969,8 +1048,7 @@ def _fleet_group_key(spark: SparkSession, events_dir: str,
                       for f in st.fields))
     return (fp, cfg.mode.upper(), tuple(cfg.primary_keys or ()),
             cfg.snapshot_mode, cfg.num_state_buckets,
-            cfg.max_files_per_trigger, cfg.live, cfg.poll_interval_ms,
-            cfg.max_wait_s)
+            cfg.max_files_per_trigger, cfg.live, cfg.max_wait_s)
 
 
 def bounded_sync_multi_fused(spark: SparkSession,
@@ -978,39 +1056,40 @@ def bounded_sync_multi_fused(spark: SparkSession,
                              out_dir: str, checkpoint_root: str,
                              cfgs: dict[str, BoundedStreamConfig]) -> dict:
     """Streaming twin of ``engine.sync_multi_fused_hetero`` (VERDICT r5
-    #6): drain a FLEET of bounded CDC streams in O(#schema/mode/key
-    groups) streaming queries instead of one query per table.
+    #6): drain a FLEET of bounded CDC streams in O(#fusion groups)
+    streaming queries instead of one query per table.
 
-    Tables are grouped by (payload schema fingerprint, mode, primary
-    keys); each group is ONE ``foreachBatch`` query over the union of
-    its tables' sources, every event stamped with its ``_table``
-    discriminator, compacted by ONE :class:`MergeCompactor` keyed
-    ``(_table, *pks)`` — per-table results are bit-identical to running
+    Tables fuse when their payload schema fingerprint, mode, primary
+    keys and every behavior-relevant cfg field agree (``live``,
+    ``snapshot_mode``, ``num_state_buckets``, ``max_files_per_trigger``,
+    ``max_wait_s`` — see :func:`_fleet_group_key`), so a group's
+    behavior is exactly its members' shared config, never the first
+    table's. Each group is ONE drain over the union of its tables'
+    sources, every event stamped with its ``_table`` discriminator;
+    DEDUPE groups compact through ONE :class:`MergeCompactor` keyed
+    ``(_table, *pks)``. Per-table results are bit-identical to running
     :func:`bounded_sync` per table (parity-tested), but a 150-table
     fleet with 3 schemas costs 3 queries' worth of trigger scheduling,
-    checkpointing, and job launch overhead. No-PK groups dedupe on all
+    checkpointing and job launch overhead. No-PK groups dedupe on all
     non-system columns, same as the single-table path.
 
-    All group queries run CONCURRENTLY with a shared ``max_duration_s``
-    guard (the max across the fleet). A group whose cfgs say
-    ``live=False`` drains under ``Trigger.AvailableNow``; ``live=True``
-    groups poll for NEW files on ``poll_interval_ms`` and stop on their
-    own idle timeout (``max_wait_s``) exactly like per-table
-    :func:`bounded_sync` live mode — each live group gets its OWN
-    bound :class:`_IdleStopListener` (listeners are session-global, so
-    an unbound one would reset its idle clock on any group's progress)
-    and its own snapshot-phase gate. Because ``live``, ``snapshot_mode``,
-    ``num_state_buckets``, ``max_files_per_trigger`` and the poll/idle
-    settings are all part of the fusion group key, a group's behavior
-    is exactly its members' shared config — never the first table's.
-    Group state lands at ``{out_dir}/group=<gid>`` partitioned the
-    same way as any MergeCompactor state, where ``gid`` is a stable
-    hash of (group key, member tables) — NOT an enumeration index, so
-    adding or removing a table from the fleet can never resume another
-    group's checkpoint (a changed membership changes the union plan's
-    source legs, which a file-source checkpoint cannot absorb; the new
-    gid starts fresh and the keyed MERGE reconverges). ``fleet.json``
-    beside it maps groups to tables for readers
+    Every group runs as a :func:`bounded_sync` drain does — same
+    query start, snapshot-mode dispatch and sink — and all groups are
+    driven CONCURRENTLY by the same poll loop, under one shared
+    ``max_duration_s`` guard (the max across the fleet). Each group's
+    query has its OWN bound :class:`_IdleStopListener` and
+    snapshot-phase gate, and stops on its own ``max_wait_s`` idle
+    timeout: ``live=False`` groups drain under ``Trigger.AvailableNow``
+    (the idle stop only guards them, as on the single-table path);
+    ``live=True`` groups poll for new files every ``_POLL_INTERVAL_MS``
+    until idle. Group state lands at ``{out_dir}/group=<gid>``
+    partitioned the same way as any MergeCompactor state, where ``gid``
+    is a stable hash of (group key, member tables) — NOT an enumeration
+    index, so adding or removing a table from the fleet can never
+    resume another group's checkpoint (a changed membership changes the
+    union plan's source legs, which a file-source checkpoint cannot
+    absorb; the new gid starts fresh and the keyed MERGE reconverges).
+    ``fleet.json`` beside it maps groups to tables for readers
     (:func:`read_fleet_table`). Snapshot-mode parity matches
     :func:`bounded_sync`: ``never``/``schema_only`` on a group's FIRST
     contact drains-and-commits without emitting rows.
@@ -1026,36 +1105,8 @@ def bounded_sync_multi_fused(spark: SparkSession,
     (maintained views, text dedup groups, semantic groups) still
     reject loudly — run those tables through :func:`bounded_sync`.
     """
-    import hashlib
-    import json
-    import os
-
     for t, c in cfgs.items():
-        if c.view_path or c.view_group_keys:
-            raise ValueError(
-                f"table {t!r}: maintained views are per-table state and "
-                "are not supported on the fused fleet path — run that "
-                "table through bounded_sync, or fuse without the view")
-        if c.dedup_groups_path:
-            raise ValueError(
-                f"table {t!r}: dedup-groups side state is per-table "
-                "and not supported on the fused fleet path — run that "
-                "table through bounded_sync")
-        if c.ann_index_path and c.mode.upper() != "DEDUPE":
-            raise ValueError(
-                f"table {t!r}: ann_index_path requires DEDUPE mode — "
-                "the index mirrors the table's CURRENT state, which "
-                "APPEND mode does not maintain")
-        if c.lexical_index_path and c.mode.upper() != "DEDUPE":
-            raise ValueError(
-                f"table {t!r}: lexical_index_path requires DEDUPE "
-                "mode — the postings mirror the table's CURRENT "
-                "state, which APPEND mode does not maintain")
-        if c.semantic_groups_path:
-            raise ValueError(
-                f"table {t!r}: the semantic-groups side state is "
-                "per-table and not supported on the fused fleet path "
-                "— run that table through bounded_sync")
+        _check_side_states(c, t)
 
     groups: dict[tuple, list[str]] = {}
     for t in sorted(cfgs):
@@ -1064,174 +1115,69 @@ def bounded_sync_multi_fused(spark: SparkSession,
 
     os.makedirs(out_dir, exist_ok=True)
     manifest: dict[str, dict] = {}
-    runs, reasons = [], {}
+    drains: list[_Drain] = []
     max_duration = max(c.max_duration_s for c in cfgs.values())
-    # group keys can mix None/int fields (max_files_per_trigger):
-    # deterministic order via repr, not tuple comparison
-    for key, tables in sorted(groups.items(), key=lambda kv: repr(kv[0])):
-        _, mode, pks = key[0], key[1], key[2]
-        # every behavior-relevant field is IN the group key, so the
-        # first member's cfg is the group's cfg by construction
-        cfg0 = cfgs[tables[0]]
-        gi = hashlib.md5(repr((key, tuple(tables)))
-                         .encode()).hexdigest()[:12]
-        gpath = os.path.join(out_dir, f"group={gi}")
-        ckpt = os.path.join(checkpoint_root, f"group={gi}")
-        parts = []
-        for t in tables:
-            s = read_event_stream(spark, events_dirs[t],
-                                  cfg0.max_files_per_trigger)
-            parts.append(s.withColumn("_table", F.lit(t)))
-        stream = parts[0]
-        for p in parts[1:]:
-            stream = stream.unionByName(p)
-        # snapshot-mode dispatch, same contract as bounded_sync: the
-        # group's initial contact under never/schema_only commits every
-        # present file while emitting zero rows
-        is_initial = not os.path.exists(os.path.join(ckpt, "commits"))
-        effective = cfg0.snapshot_mode
-        if is_initial and effective == "never":
-            effective = "schema_only"
-        if is_initial and effective in ("schema_only",
-                                        "schema_only_recovery"):
-            stream = stream.filter(F.lit(False))
-        phase = {"snapshot_active": False}
-        if mode == "DEDUPE":
-            keys = ["_table", *pks]
-            if not pks:
-                system = set(SC.ingest_names) | {"_table",
-                                                 "_snapshot_phase"}
-                keys = ["_table"] + [c for c in stream.columns
-                                     if c not in system]
-            compactor = MergeCompactor(gpath, keys,
-                                       cfg0.num_state_buckets)
-            # per-table side states (VERDICT r12 #3): tables that
-            # configure lexical_index_path / ann_index_path get their
-            # slice of the fused drain run through the SAME
-            # _maintain_* per-epoch drivers the per-table path uses
-            # (the unified epoch skeleton — never a fused-path copy).
-            # Handles are per-table; the group epoch id rides as the
-            # exactly-once marker, and index CONTENT is
-            # batch-partitioning-independent (purge-then-add of
-            # within-batch latest versions; the ANN seed codebook
-            # keys off wave-one ids, identical under the same waves),
-            # so a fused table's index equals its per-table twin's.
-            side_tables = []
-            for t in tables:
-                if cfgs[t].lexical_index_path:
-                    from .lexical_state import StreamingLexicalIndex
-                    side_tables.append((
-                        t, _maintain_lexical_index,
-                        StreamingLexicalIndex(
-                            cfgs[t].lexical_index_path,
-                            num_parts=cfgs[t].lexical_parts,
-                            compact_file_threshold=(
-                                cfgs[t].lexical_compact_threshold),
-                            positions=cfgs[t].lexical_positions),
-                        cfgs[t]))
-                if cfgs[t].ann_index_path:
-                    from ..operators.llm.annindex import IvfVectorIndex
-                    side_tables.append((
-                        t, _maintain_ann_index,
-                        IvfVectorIndex(cfgs[t].ann_index_path,
-                                       n_cells=cfgs[t].ann_index_cells),
-                        cfgs[t]))
-
-            def sink(batch_df: DataFrame, batch_id: int,
-                     _c=compactor, _live=cfg0.live,
-                     _phase=phase, _side_tables=side_tables) -> None:
-                if _live:
-                    # T3 gate, per group: idle stop must not fire while
-                    # this group's latest batch still carried snapshot
-                    # rows (same probe as bounded_sync's live sink)
-                    _phase["snapshot_active"] = not (
-                        batch_df.filter(
-                            F.col("_snapshot_phase")).isEmpty())
-                _c.merge(spark, batch_df.drop("_snapshot_phase"))
-                for _t, _maintain, _state, _tcfg in _side_tables:
-                    _maintain(spark, _state,
-                              batch_df.filter(F.col("_table") == _t)
-                                      .drop("_table"),
-                              int(batch_id), _tcfg)
-
-            writer = stream.writeStream.foreachBatch(sink)
-        else:
-            writer = (stream.drop("_snapshot_phase")
-                      .writeStream.format("parquet")
-                      .partitionBy("_table")
-                      .option("path", gpath))
-        writer = writer.option("checkpointLocation", ckpt)
-        listener = None
-        if cfg0.live:
-            writer = writer.trigger(
-                processingTime=f"{cfg0.poll_interval_ms} milliseconds")
-            listener = _IdleStopListener(phase)
-            spark.streams.addListener(listener)
-        else:
-            writer = writer.trigger(availableNow=True)
-        q = writer.start()
-        if listener is not None:
-            listener.bind(q.id)     # ignore the other groups' events
-        runs.append((gi, q, cfg0, listener))
-        manifest[gi] = {"tables": tables, "mode": mode,
-                        "primary_keys": list(pks), "path": gpath,
-                        "live": cfg0.live,
-                        "snapshot_mode_effective": effective,
-                        # operator/erasure visibility: which tables
-                        # carry maintained side state, where, and
-                        # which event column keys it (r13) — this is
-                        # what lets purge_fleet_keys reach the
-                        # indexes, not just the compacted state
-                        "side_states": {
-                            t: {k: {"path": p, "id_col": c}
-                                for k, p, c in
-                                (("lexical",
-                                  cfgs[t].lexical_index_path,
-                                  cfgs[t].lexical_doc_id_col),
-                                 ("ann", cfgs[t].ann_index_path,
-                                  cfgs[t].ann_vec_id_col))
-                                if p}
-                            for t in tables
-                            if (cfgs[t].lexical_index_path
-                                or cfgs[t].ann_index_path)}}
-
-    # one shared poll loop driving every group concurrently:
-    # AvailableNow groups terminate on their own; live groups stop on
-    # their own idle timeout; the fleet-max wall clock guards both
-    start = time.time()
     try:
-        reasons = {gi: "drained" for gi, *_ in runs}
-        pending = list(runs)
-        while pending:
-            still = []
-            for gi, q, cfg0, listener in pending:
-                if not q.isActive or q.awaitTermination(0.05):
-                    continue
-                if time.time() - start > max_duration:
-                    reasons[gi] = "max_duration"
-                    q.stop()
-                    continue
-                if listener is not None:
-                    try:
-                        trigger_active = bool(
-                            q.status.get("isTriggerActive"))
-                    except Exception:
-                        trigger_active = False
-                    if (not listener.busy and not trigger_active
-                            and not listener.phase["snapshot_active"]
-                            and time.time() - listener.last_data_ts
-                            > cfg0.max_wait_s):
-                        reasons[gi] = "idle_timeout"
-                        q.stop()
-                        continue
-                still.append((gi, q, cfg0, listener))
-            pending = still
-        for _, q, *_ in runs:
-            q.awaitTermination()
+        # group keys can mix None/int fields (max_files_per_trigger):
+        # deterministic order via repr, not tuple comparison
+        for key, tables in sorted(groups.items(),
+                                  key=lambda kv: repr(kv[0])):
+            mode, pks = key[1], key[2]
+            # every behavior-relevant field is IN the group key, so the
+            # first member's cfg is the group's cfg by construction
+            cfg0 = cfgs[tables[0]]
+            gi = hashlib.md5(repr((key, tuple(tables)))
+                             .encode()).hexdigest()[:12]
+            gpath = os.path.join(out_dir, f"group={gi}")
+            ckpt = os.path.join(checkpoint_root, f"group={gi}")
+            stream = functools.reduce(DataFrame.unionByName, [
+                read_event_stream(spark, events_dirs[t],
+                                  cfg0.max_files_per_trigger)
+                .withColumn("_table", F.lit(t)) for t in tables])
+            stream, effective = _stream_snapshot_mode(
+                spark, stream, cfg0.snapshot_mode, ckpt)
+            compactor, side = None, []
+            if mode == "DEDUPE":
+                compactor = MergeCompactor(
+                    gpath, _merge_keys(stream, pks, ["_table"]),
+                    cfg0.num_state_buckets)
+                # per-table side states (VERDICT r12 #3) run through
+                # the SAME maintainers the per-table path uses; the
+                # group epoch id rides as the exactly-once marker, and
+                # index CONTENT is batch-partitioning-independent
+                # (purge-then-add of within-batch latest versions; the
+                # ANN seed codebook keys off wave-one ids, identical
+                # under the same waves), so a fused table's index
+                # equals its per-table twin's
+                side = [(t, fn) for t in tables
+                        for fn in _side_maintainers(cfgs[t], compactor)]
+            drains.append(_start_drain(
+                spark, stream, gpath, ckpt, cfg0, compactor=compactor,
+                side=side, partition_by="_table"))
+            manifest[gi] = {"tables": tables, "mode": mode,
+                            "primary_keys": list(pks), "path": gpath,
+                            "live": cfg0.live,
+                            "snapshot_mode_effective": effective,
+                            # operator/erasure visibility: which tables
+                            # carry maintained side state, where, and
+                            # which event column keys it (r13) — this
+                            # is what lets purge_fleet_keys reach the
+                            # indexes, not just the compacted state
+                            "side_states": {
+                                t: {k: {"path": p, "id_col": c}
+                                    for k, p, c in
+                                    (("lexical",
+                                      cfgs[t].lexical_index_path,
+                                      cfgs[t].lexical_doc_id_col),
+                                     ("ann", cfgs[t].ann_index_path,
+                                      cfgs[t].ann_vec_id_col))
+                                    if p}
+                                for t in tables
+                                if (cfgs[t].lexical_index_path
+                                    or cfgs[t].ann_index_path)}}
+        reasons = dict(zip(manifest, _drive_drains(drains, max_duration)))
     finally:
-        for _, _, _, listener in runs:
-            if listener is not None:
-                spark.streams.removeListener(listener)
+        _close_drains(spark, drains)
 
     with open(os.path.join(out_dir, "fleet.json"), "w") as fh:
         json.dump(manifest, fh, indent=2)
@@ -1260,9 +1206,6 @@ def purge_fleet_keys(spark: SparkSession, out_dir: str,
     groups dedupe on full payloads and have no stable erasure key —
     they are skipped and reported. Returns {group id: buckets
     rewritten} plus per-index erased-row counts and the skip lists."""
-    import json
-    import os
-
     with open(os.path.join(out_dir, "fleet.json")) as fh:
         manifest = json.load(fh)
     rewritten: dict = {}
@@ -1313,10 +1256,6 @@ def read_fleet_table(spark: SparkSession, out_dir: str,
     e.g. snapshot_mode='never' on first contact — has no state
     directory yet; that reads as an empty (schema-less) frame, not a
     scan error."""
-    import json
-    import os
-
-    from ..fs import fs_exists
     from ..sinks.merge import BUCKET_COL as _MERGE_BUCKET
 
     with open(os.path.join(out_dir, "fleet.json")) as fh:

@@ -12,6 +12,8 @@ module code path.
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import sys
 
@@ -52,8 +54,10 @@ def main() -> None:
         sets = persist_once(signatures_from_hashes(
             shingle_hashes(collapsed), with_set=True))
         cand = lsh_candidate_pairs(sets)
-    txt = cand._sc._jvm.PythonSQLUtils.explainString(
-        cand._jdf.queryExecution(), "formatted")
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        cand.explain("formatted")
+    txt = buf.getvalue()
     with open(outfile, "w") as f:
         f.write(txt)
     n_ex = txt.count(" Exchange")

@@ -11,6 +11,8 @@ $SPARK_GRAFT_SF_DIR (default sf0.1).
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import sys
 
@@ -27,8 +29,10 @@ def main() -> None:
     spark = get_spark("dump_plan_files")
     for n in names:
         df = QUERIES[n](spark, sf_dir)
-        txt = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        txt = buf.getvalue()
         with open(os.path.join(outdir, f"{n}_{suffix}.txt"), "w") as f:
             f.write(txt)
         print(f"wrote {n}_{suffix}.txt ({len(txt)} chars)")

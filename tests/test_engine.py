@@ -205,6 +205,31 @@ def test_sync_multi_table_routing(spark, sf_dir, tmp_path):
     assert st.offsets["tab_b"]["pos"] is not None
 
 
+def test_sync_multi_legacy_manifest_matches_sync(spark, sf_dir, tmp_path):
+    """manifest_format='legacy' reaches sync_multi's per-table manifests:
+    a one-table sync_multi writes the same legacy manifest as sync."""
+    from pyspark.sql import functions as F
+    from python_cdc_component_spark.engine import sync_multi
+    from python_cdc_component_spark.sources.events import read_cdc_events
+
+    cfg = SyncConfig(mode="DEDUPE", primary_keys=["user_id"],
+                     manifest_format="legacy", destination="in.c-bucket")
+    sync(spark, sf_dir, str(tmp_path / "single"), cfg)
+    multi = read_cdc_events(spark, sf_dir).withColumn("_table",
+                                                      F.lit("events"))
+    sync_multi(spark, multi, str(tmp_path / "multi"), {"events": cfg})
+    single, multi = (json.load(open(tmp_path / d / "events.manifest"))
+                     for d in ("single", "multi"))
+    assert list(multi) == list(single)          # same keys, same order
+    for k in ("destination", "primary_key", "incremental"):
+        assert multi[k] == single[k]
+    # sync keeps the source's _table discriminator column; sync_multi
+    # routes on it and drops it
+    assert multi["column_metadata"] == {
+        c: md for c, md in single["column_metadata"].items()
+        if c != "_table"}
+
+
 def test_sync_column_filter_chained(spark, sf_dir, tmp_path):
     """incremental-column-filter-chained shape: two chained syncs with an
     exclude list — filtered columns never reach the output or the

@@ -206,15 +206,20 @@ def test_streaming_schema_only_post_initial_streams(spark, sf_dir,
     assert got.agg(F.min(F.col("kbc__pos"))).first()[0] > mid
 
 
-def test_streaming_never_mode_chained(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("ckpt_uri", [False, True], ids=["path", "uri"])
+def test_streaming_never_mode_chained(spark, sf_dir, tmp_path, ckpt_uri):
     """Stream-path snapshot_mode='never': run 1 (fresh checkpoint)
     commits every present file while emitting zero rows; run 2 consumes
-    ONLY files that arrived afterwards."""
+    ONLY files that arrived afterwards — also when the checkpoint is a
+    ``file://`` URI (run 2 must see the committed checkpoint, not treat
+    itself as initial and drop the second half)."""
     from python_cdc_component_spark.streaming.bounded import (
         BoundedStreamConfig, bounded_sync)
 
     src = str(tmp_path / "ssrc"); os.makedirs(src)
     out, ckpt = str(tmp_path / "sout"), str(tmp_path / "sckpt")
+    if ckpt_uri:
+        ckpt = "file://" + ckpt
     raw = _raw(spark, sf_dir)
     mid = raw.agg(F.max("event_id")).collect()[0][0] // 2
 
@@ -242,3 +247,24 @@ def test_streaming_never_mode_chained(spark, sf_dir, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() > 0
     assert got.agg(F.min(F.col("kbc__pos"))).first()[0] > mid
+
+
+def test_stream_drains_reject_unknown_snapshot_mode(spark, sf_dir,
+                                                    tmp_path):
+    """A mistyped snapshot_mode fails on both stream drains, as it does
+    on the batch path (control.resolve_snapshot_mode) — never silently
+    replays the log under an unknown mode."""
+    from python_cdc_component_spark.streaming.bounded import (
+        BoundedStreamConfig, bounded_sync, bounded_sync_multi_fused)
+
+    src = str(tmp_path / "src")
+    _raw(spark, sf_dir).coalesce(1).write.parquet(src)
+    cfg = BoundedStreamConfig(mode="DEDUPE", primary_keys=["user_id"],
+                              snapshot_mode="schema-only")
+    with pytest.raises(ValueError, match="unknown snapshot_mode"):
+        bounded_sync(spark, src, str(tmp_path / "out"),
+                     str(tmp_path / "ckpt"), cfg)
+    with pytest.raises(ValueError, match="unknown snapshot_mode"):
+        bounded_sync_multi_fused(spark, {"t": src}, str(tmp_path / "fout"),
+                                 str(tmp_path / "fckpt"), {"t": cfg})
+    assert not spark.streams.active
