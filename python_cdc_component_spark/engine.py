@@ -5,9 +5,11 @@ Reference flow (``ex_mysql_cdc/src/component.py:92-170``): config → state
 restore → metadata → Debezium ingest → staging export (dedup SQL) →
 manifests/state. Spark flow: scan event source → normalize envelope →
 route schema-changes → mode switch (append | window-dedup) → rename to
-output system columns → sink + manifest + state. Catalyst collapses the
-whole thing into one job per output table; there are no process
-boundaries (the reference crosses five, SURVEY §3.1).
+output system columns → sink + manifest + state. Each output table is
+one Spark execution: the shuffle map stage of the dedup window plus the
+write, with the end offsets observed during that write
+(``DataFrame.observe``) instead of a second pass over the plan; there
+are no process boundaries (the reference crosses five, SURVEY §3.1).
 """
 
 from __future__ import annotations
@@ -15,7 +17,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -89,6 +91,34 @@ def _write_table_manifest(merged: TableSchema, path: str,
                               incremental=True if cfg.incremental else None)
     else:
         write_manifest(merged, path, incremental=cfg.incremental)
+
+
+def _write_observed(result: DataFrame, path: str, cfg: SyncConfig) -> dict:
+    """Write ``result`` to its sink and return its end offsets (max
+    event timestamp and pos; NULL when empty), observed during the
+    write instead of a second execution of the plan. The observed frame
+    stays local: an Observation fires once, and callers re-execute
+    ``result``."""
+    obs = Observation()
+    observed = result.observe(obs,
+                              F.max(SC.EVENT_TIMESTAMP_MS).alias("ts"),
+                              F.max(SC.POS).alias("pos"))
+    if cfg.output_format == "csv":
+        write_csv(observed, path)
+    else:
+        write_parquet(observed, path)
+    return obs.get
+
+
+def _advance_offsets(state: RunState, table_name: str, bounds) -> None:
+    """Advance ``table_name``'s offsets to ``bounds``. An empty source
+    yields NULL bounds — keep the prior offsets so is_initial_run
+    semantics survive an empty run (the reference likewise only
+    advances offsets on consumed events)."""
+    if bounds["ts"] is not None and bounds["pos"] is not None:
+        state.offsets[table_name] = {"ts": bounds["ts"],
+                                     "file": "binlog.000001",
+                                     "pos": bounds["pos"]}
 
 
 def to_output_columns(df: DataFrame) -> DataFrame:
@@ -177,10 +207,7 @@ def sync(spark: SparkSession, sf_dir: str, out_dir: str,
         from .operators.schema_align import align_to_schema
         result = align_to_schema(result, merged.struct)
 
-    if cfg.output_format == "csv":
-        write_csv(result, path)
-    else:
-        write_parquet(result, path)
+    bounds = _write_observed(result, path, cfg)
 
     registry.save(registry_path)
     _write_table_manifest(merged, path + ".manifest", cfg)
@@ -194,17 +221,7 @@ def sync(spark: SparkSession, sf_dir: str, out_dir: str,
         bounds = events.agg(
             F.max(SC.event_timestamp).alias("ts"),
             F.max(SC.pos).alias("pos")).collect()[0]
-    else:
-        bounds = result.agg(
-            F.max(SC.EVENT_TIMESTAMP_MS).alias("ts"),
-            F.max(SC.POS).alias("pos")).collect()[0]
-    if bounds["ts"] is not None and bounds["pos"] is not None:
-        # An empty source yields NULL bounds — keep the prior offsets so
-        # is_initial_run semantics survive an empty run (the reference
-        # likewise only advances offsets on consumed events).
-        state.offsets[table_name] = {"ts": bounds["ts"],
-                                     "file": "binlog.000001",
-                                     "pos": bounds["pos"]}
+    _advance_offsets(state, table_name, bounds)
     state.last_synced_tables = [table_name]
     state.previous_mode = cfg.mode
     state.save(os.path.join(out_dir, "state.json"))
@@ -296,10 +313,7 @@ def sync_multi_fused_hetero(spark: SparkSession,
                   .agg(F.max(SC.EVENT_TIMESTAMP_MS).alias("ts"),
                        F.max(SC.POS).alias("pos")).collect())
         for r in bounds:
-            if r["ts"] is not None and r["pos"] is not None:
-                state.offsets[r["_table"]] = {"ts": r["ts"],
-                                              "file": "binlog.000001",
-                                              "pos": r["pos"]}
+            _advance_offsets(state, r["_table"], r)
         data_schema = T.StructType(
             [f for f in result.schema.fields if f.name != "_table"])
         for t in tables:
@@ -336,6 +350,9 @@ def sync_multi_fused(spark: SparkSession, events: DataFrame, out_dir: str,
       sink directory layout is identical to the per-table loop's, so
       readers and manifests don't change);
     - ONE groupBy("_table") aggregate for every table's end offsets.
+      It re-executes the fused plan after the write: ``observe`` has no
+      GROUP BY, so the single-execution offsets of ``sync`` and
+      ``sync_multi`` wait for this path to fold into one batch sync path.
 
     Tables may differ in mode (APPEND vs DEDUPE) — each mode group is
     fused independently.  Tables needing different primary keys or
@@ -361,10 +378,7 @@ def sync_multi_fused(spark: SparkSession, events: DataFrame, out_dir: str,
               .agg(F.max(SC.EVENT_TIMESTAMP_MS).alias("ts"),
                    F.max(SC.POS).alias("pos")).collect())
     for r in bounds:
-        if r["ts"] is not None and r["pos"] is not None:
-            state.offsets[r["_table"]] = {"ts": r["ts"],
-                                          "file": "binlog.000001",
-                                          "pos": r["pos"]}
+        _advance_offsets(state, r["_table"], r)
     data_schema = T.StructType(
         [f for f in result.schema.fields if f.name != "_table"])
     for t in sorted(cfgs):
@@ -428,19 +442,9 @@ def sync_multi(spark: SparkSession, events: DataFrame, out_dir: str,
             from .operators.schema_align import align_to_schema
             result = align_to_schema(result, merged.struct)
 
-        if cfg.output_format == "csv":
-            write_csv(result, path)
-        else:
-            write_parquet(result, path)
+        bounds = _write_observed(result, path, cfg)
         _write_table_manifest(merged, path + ".manifest", cfg)
-
-        bounds = result.agg(
-            F.max(SC.EVENT_TIMESTAMP_MS).alias("ts"),
-            F.max(SC.POS).alias("pos")).collect()[0]
-        if bounds["ts"] is not None and bounds["pos"] is not None:
-            state.offsets[table_name] = {"ts": bounds["ts"],
-                                         "file": "binlog.000001",
-                                         "pos": bounds["pos"]}
+        _advance_offsets(state, table_name, bounds)
         results[table_name] = result
 
     registry.save(registry_path)

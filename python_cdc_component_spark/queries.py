@@ -3157,8 +3157,8 @@ def q21_late_supplier_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
     (3 exchanges → 2). Partial aggregation is no loss here: an order
     almost never lists the same supplier twice, so map-side partials
     reduced ~nothing while the extra exchange re-shuffled the whole
-    aggregate anyway (interleaved A/B `ab_q21_r13.json`: min medians
-    1.26 → 0.94 s, controls flat, rows identical)."""
+    aggregate anyway (interleaved A/B: min medians 1.26 → 0.94 s,
+    controls flat, rows identical)."""
     s = _spark(spark)
     li = read_table(s, sf_dir, "lineitem")
     orders, supp = read_table(s, sf_dir, "orders"), read_table(s, sf_dir, "supplier")

@@ -51,8 +51,12 @@ def write_csv(df: DataFrame, path: str, columns: list[str] | None = None,
     reference's temporal egress formats)."""
     if columns:
         df = df.select(*columns)
+    # No partition-count probe guards the coalesce: a shuffle-free
+    # coalesce(n) already yields min(n, partitions), while reading
+    # df.rdd.getNumPartitions() under AQE materialises the shuffle map
+    # stage in a job of its own that the write then runs again.
     n = _estimate_partitions(df, target_slice_bytes)
-    if n is not None and n < df.rdd.getNumPartitions():
+    if n is not None:
         df = df.coalesce(n)
     writer = (df.write.mode(mode)
               .option("header", str(header).lower())

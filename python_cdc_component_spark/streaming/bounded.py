@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
 from ..control import SNAPSHOT_MODES
-from ..fs import fs_exists
+from ..fs import fs_exists, fs_list_names
 from ..model.envelope import OP_SNAPSHOT_READ, SYSTEM_COLUMNS as SC
 from ..sinks.merge import MergeCompactor
 from ..sources.events import (
@@ -991,6 +991,13 @@ def _close_drains(spark: SparkSession, drains: list[_Drain]) -> None:
         spark.streams.removeListener(d.listener)
 
 
+def _last_commit(spark: SparkSession, checkpoint_dir: str) -> int:
+    """Id of the last micro-batch committed to ``checkpoint_dir`` (-1
+    before the first commit)."""
+    names = fs_list_names(spark, os.path.join(checkpoint_dir, "commits"))
+    return max((int(n) for n in names if n.isdigit()), default=-1)
+
+
 def bounded_sync(spark: SparkSession, events_dir: str, out_path: str,
                  checkpoint_dir: str,
                  cfg: BoundedStreamConfig | None = None) -> dict:
@@ -999,7 +1006,9 @@ def bounded_sync(spark: SparkSession, events_dir: str, out_path: str,
 
     ``Trigger.AvailableNow`` drains everything present at start then
     stops (P6 semantics); the wall-clock and idle stops guard the drain
-    like the reference's poll loop. Returns run stats.
+    like the reference's poll loop. Returns run stats; ``batches``
+    counts the micro-batches this run committed, not the checkpoint's
+    lifetime total.
     """
     cfg = cfg or BoundedStreamConfig()
     _check_side_states(cfg)
@@ -1015,16 +1024,16 @@ def bounded_sync(spark: SparkSession, events_dir: str, out_path: str,
             view = StreamingAggView(cfg.view_path, keys,
                                     cfg.view_group_keys, cfg.view_measure)
         side = [(None, fn) for fn in _side_maintainers(cfg, compactor)]
+    committed = _last_commit(spark, checkpoint_dir)
     drain = _start_drain(spark, stream, out_path, checkpoint_dir, cfg,
                          compactor=compactor, view=view, side=side)
     try:
         [stopped_reason] = _drive_drains([drain], cfg.max_duration_s)
     finally:
         _close_drains(spark, [drain])
-    progress = drain.query.lastProgress
     return {
         "stopped_reason": stopped_reason,
-        "batches": progress["batchId"] + 1 if progress else 0,
+        "batches": _last_commit(spark, checkpoint_dir) - committed,
         "sink_path": out_path,
         "snapshot_mode_effective": effective,
     }

@@ -48,6 +48,7 @@ def test_chained_incremental_sync(spark, sf_dir, tmp_path):
     _stage(raw.filter(F.col("event_id") <= mid), tmp_path, src, "batch1")
     stats1 = bounded_sync(spark, src, out, ckpt, cfg)
     assert stats1["stopped_reason"] == "drained"
+    assert stats1["batches"] == 1          # one file, one micro-batch
     got1 = {(r.user_id, r[SC.pos]) for r in spark.read.parquet(out).collect()}
     exp1 = {(r.user_id, r[SC.pos])
             for r in dedup_latest(
@@ -60,6 +61,9 @@ def test_chained_incremental_sync(spark, sf_dir, tmp_path):
     _stage(raw.filter(F.col("event_id") > mid), tmp_path, src, "batch2")
     stats2 = bounded_sync(spark, src, out, ckpt, cfg)
     assert stats2["stopped_reason"] == "drained"
+    # run 2's own micro-batches (the one new file), not the lifetime
+    # total of the checkpoint it resumed
+    assert stats2["batches"] == 1
 
     got2 = {(r.user_id, r[SC.pos]) for r in spark.read.parquet(out).collect()}
     exp2 = {(r.user_id, r[SC.pos])
@@ -71,6 +75,11 @@ def test_chained_incremental_sync(spark, sf_dir, tmp_path):
     # runs, not only within a run)
     updated = {u for (u, p) in exp2 if p > mid}
     assert updated and all(p > mid for (u, p) in got2 if u in updated)
+
+    # ---- run 3: nothing new → no micro-batch runs
+    stats3 = bounded_sync(spark, src, out, ckpt, cfg)
+    assert stats3["stopped_reason"] == "drained"
+    assert stats3["batches"] == 0
 
 
 def test_chained_soft_delete_survives_runs(spark, sf_dir, tmp_path):

@@ -343,3 +343,118 @@ def test_sync_multi_fused_hetero_mixed_schema_fleet(spark, sf_dir,
     from python_cdc_component_spark.plans.explain import plan_summary
     for res in results.values():
         assert plan_summary(res).shuffles == 1
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts, counted in a job group of
+    its own. Job events reach the status tracker asynchronously, so the
+    count is read once every job of the group has ended and two reads
+    agree."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    last, deadline = None, time.time() + 30
+    while time.time() < deadline:
+        ids = sorted(tracker.getJobIdsForGroup(group))
+        infos = [tracker.getJobInfo(i) for i in ids]
+        if ids == last and all(
+                i is not None and i.status in ("SUCCEEDED", "FAILED")
+                for i in infos):
+            break
+        last = ids
+        time.sleep(0.2)
+    return len(last)
+
+
+def test_sync_job_budget(spark, sf_dir, tmp_path):
+    """A DEDUPE sync is one execution of its plan: the dedup window's
+    shuffle map stage plus the write, on both sinks. The end offsets
+    come from the write itself, and the CSV sink runs no partition
+    probe — a further execution of the plan fails here."""
+    for fmt in ("csv", "parquet"):
+        out = str(tmp_path / fmt)
+        cfg = SyncConfig(mode="DEDUPE", output_format=fmt)
+        jobs = _jobs_run_by(spark, lambda: sync(spark, sf_dir, out, cfg))
+        assert 1 <= jobs <= 2, (fmt, jobs)
+        st = RunState.load(os.path.join(out, "state.json"))
+        assert st.offsets["events"]["pos"] is not None
+
+
+def test_sync_offsets_observed_in_write(spark, sf_dir, tmp_path):
+    """The offsets observed during the write are the max consumed
+    coordinates; a chained run with no new events leaves ``state.json``
+    byte-identical (NULL bounds keep the prior offsets)."""
+    from pyspark.sql import functions as F
+    from python_cdc_component_spark.model.envelope import SYSTEM_COLUMNS as SC
+    from python_cdc_component_spark.sources.events import read_events
+
+    out = str(tmp_path / "out")
+    state_path = os.path.join(out, "state.json")
+    res1 = sync(spark, sf_dir, out, SyncConfig(mode="DEDUPE"))["events"]
+    ev = read_events(spark, sf_dir)
+    st = RunState.load(state_path)
+    assert st.offsets["events"]["pos"] == ev.agg(
+        F.max("event_id")).collect()[0][0]
+    assert st.offsets["events"]["ts"] == res1.agg(
+        F.max(SC.EVENT_TIMESTAMP_MS)).collect()[0][0]
+    with open(state_path, "rb") as fh:
+        run1 = fh.read()
+
+    # run 2: the stored state, the same log — nothing past the offsets
+    res2 = sync(spark, sf_dir, out, SyncConfig(mode="DEDUPE"),
+                RunState.load(state_path))["events"]
+    assert res2.count() == 0
+    with open(state_path, "rb") as fh:
+        assert fh.read() == run1
+
+
+def test_sync_schema_only_bootstrap_advances_to_source_end(spark, sf_dir,
+                                                           tmp_path):
+    """The schema-only bootstrap (``never`` on a fresh state) writes no
+    rows but still captures the source's end position from the input,
+    not from the (empty) output."""
+    from pyspark.sql import functions as F
+    from python_cdc_component_spark.model.envelope import SYSTEM_COLUMNS as SC
+    from python_cdc_component_spark.sources.events import read_cdc_events
+
+    out = str(tmp_path / "out")
+    res = sync(spark, sf_dir, out,
+               SyncConfig(snapshot_mode="never"))["events"]
+    assert res.count() == 0
+    assert spark.read.parquet(os.path.join(out, "events")).count() == 0
+    end = read_cdc_events(spark, sf_dir).agg(
+        F.max(SC.event_timestamp).alias("ts"),
+        F.max(SC.pos).alias("pos")).collect()[0]
+    st = RunState.load(os.path.join(out, "state.json"))
+    assert st.offsets["events"]["pos"] == end["pos"]
+    assert st.offsets["events"]["ts"] == end["ts"]
+
+
+def test_write_csv_slice_count(spark, tmp_path):
+    """Slices per write are min(estimated slices, input partitions): one
+    file for a huge target, n for a target that asks n < k, and k
+    (never more) for a tiny target."""
+    from python_cdc_component_spark.sinks.csv_sink import _estimate_partitions
+
+    k = 4
+    df = spark.range(0, 4000, numPartitions=k).selectExpr(
+        "id", "repeat('x', 100) AS pad")
+    for target in (1 << 40, 40_000, 1_000):
+        n = _estimate_partitions(df, target)
+        path = str(tmp_path / f"slices_{target}")
+        write_csv(df, path, target_slice_bytes=target)
+        files = [f for f in os.listdir(path)
+                 if f.startswith("part-") and f.endswith(".csv")]
+        assert len(files) == min(n, k), (target, n, len(files))
+    # the three targets cover n == 1, 1 < n < k and n > k
+    assert 1 < _estimate_partitions(df, 40_000) < k
+    assert _estimate_partitions(df, 1_000) > k
