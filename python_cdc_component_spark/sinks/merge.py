@@ -9,47 +9,77 @@ table every micro-batch — O(total-state x batches) I/O.
 
 Spark-first design: the compacted state is a parquet table hash-bucketed
 on the primary key (``_kbc_bucket = pmod(xxhash64(pk...), N)`` as a
-partition directory). A micro-batch can only change rows in the buckets
-its own keys hash into, so the merge
+partition directory). A batch can only change rows in the buckets its
+own keys hash into, so ``merge``
 
 1. computes the batch's touched bucket ids (a <=N-int driver scalar),
-2. reads ONLY those buckets back (partition-pruned scan — the plan shows
-   a PartitionFilters entry, never a full-state scan),
+2. reads ONLY those bucket directories back (``read_buckets``),
 3. window-dedups batch+bucket rows per key (same W1 operator as batch
    mode), and
 4. rewrites ONLY the touched buckets via dynamic partition overwrite —
-   untouched buckets' files are never opened or rewritten; Spark's file
-   commit protocol stages new files and swaps per-partition, so a crash
-   mid-write leaves the previous bucket contents in place.
+   untouched buckets' files are never opened or rewritten.
 
-Per-batch I/O is O(|batch| + touched_buckets * state/N), proportional to
-the batch for keyed workloads. At 100 TB, N scales with state size
-(N ~ state_bytes / target_partition_bytes) and the bucket key gives every
-run the same partitioning, so the per-bucket merge shuffle is bounded and
-skew-free for uniform key hashes.
+Per-drain I/O (write-behind). A hot-key micro-batch hashes into every
+bucket, so one ``merge`` per micro-batch rewrites the whole store per
+batch. A stream drain therefore calls ``stage``: each micro-batch is
+appended as one delta directory under ``_delta/`` — O(|batch|) written,
+committed before ``foreachBatch`` returns, so offsets never run ahead of
+durable output — and ``fold`` upserts every pending delta into the
+buckets with ONE ``merge``: when the drain closes, or as soon as
+``COMPACT_FILES`` (8) deltas are pending. A drain of k micro-batches
+pays k appends and one touched-bucket rewrite per fold, instead of k
+rewrites; a one-batch drain into an existing store pays one append and
+read-back more than a direct merge. ``read`` merges pending deltas on
+read; Spark's file index hides ``_``-prefixed directories, so a plain
+parquet read of the store sees the folded base only. A fold is
+idempotent (dedup-latest over identical rows), so a replayed batch
+staged twice, or a crash between a fold's merge and its delta delete,
+converges at the next fold.
+
+Unverified crash claim: Spark's file commit protocol stages new files
+and swaps them in per partition, which is taken to mean that a crash
+mid-write leaves the previous bucket contents in place. Dynamic
+partition overwrite deletes each old bucket before it renames the new
+one in, so a kill between those two steps may lose that bucket's rows;
+no fault-injection test has confirmed or refuted this yet.
+
+At 100 TB, N scales with state size (N ~ state_bytes /
+target_partition_bytes) and the bucket key gives every run the same
+partitioning, so the per-bucket merge shuffle is bounded and skew-free
+for uniform key hashes.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fs import fs_delete as _fs_delete
 from ..fs import fs_exists as _fs_exists
+from ..fs import fs_list_names as _fs_list_names
 from ..fs import fs_read_text as _fs_read_text
+from ..fs import fs_touch as _fs_touch
 from ..fs import fs_write_text as _fs_write_text
 from ..operators.dedup import dedup_latest
 from ..operators.schema_align import union_epochs
 
 BUCKET_COL = "_kbc_bucket"
+# data files allowed to pile up before a fold: pending deltas here, data
+# files per index directory for the ANN index's cell compaction
+COMPACT_FILES = 8
 _OVERWRITE_MODE_KEY = "spark.sql.sources.partitionOverwriteMode"
 
 
 @dataclass
 class MergeCompactor:
-    """Keyed-upsert sink: ``merge`` is called once per micro-batch (from
-    ``foreachBatch``) or once per chained batch run.
+    """Keyed-upsert sink: ``merge`` upserts one batch (a chained batch
+    run, or a micro-batch that is read back inside its own batch);
+    ``stage`` + ``fold`` is the write-behind form a stream drain uses.
 
     The bucket count is part of the store's PHYSICAL LAYOUT: a row of
     key k lives in directory ``pmod(xxhash64(k), N)`` for the N the
@@ -66,8 +96,10 @@ class MergeCompactor:
     num_buckets: int = 32
 
     def _meta_path(self) -> str:
-        import os
         return os.path.join(self.state_path, "_meta.json")
+
+    def _delta_path(self) -> str:
+        return os.path.join(self.state_path, "_delta")
 
     def _resolve_buckets(self, spark: SparkSession) -> int:
         """Layout-resolved bucket count: the stored N wins over the
@@ -76,7 +108,6 @@ class MergeCompactor:
         FS API like every data path — on hdfs://\u2009/\u2009s3a:// a local
         ``open()`` would never find the file and the layout-pinning
         guard would silently do nothing."""
-        import json
         raw = _fs_read_text(spark, self._meta_path())
         if raw is not None:
             self.num_buckets = int(json.loads(raw)["num_buckets"])
@@ -85,7 +116,6 @@ class MergeCompactor:
         return self.num_buckets
 
     def _write_meta(self, spark: SparkSession) -> None:
-        import json
         _fs_write_text(spark, self._meta_path(),
                        json.dumps({"num_buckets": self.num_buckets}))
 
@@ -93,12 +123,35 @@ class MergeCompactor:
         return F.pmod(F.xxhash64(*[F.col(k) for k in self.keys]),
                       F.lit(self.num_buckets)).cast("int")
 
+    def read_buckets(self, spark: SparkSession, buckets
+                     ) -> tuple[list[int], DataFrame | None]:
+        """The stored rows of the named buckets, bucket column kept:
+        ``(ids of the buckets that exist, their rows)``, rows ``None``
+        when none exists yet. The read lists the bucket DIRECTORIES
+        explicitly (``basePath`` keeps the partition column): a
+        whole-table load + filter would run the mergeSchema footer job
+        over EVERY bucket's files before pruning — measured as a
+        full-store task wave per micro-batch on a 512-bucket state.
+        mergeSchema: after schema drift, buckets rewritten in different
+        batches carry different file schemas; without it Spark infers
+        from ONE arbitrary file and drifted columns silently vanish."""
+        present = set(_fs_list_names(spark, self.state_path))
+        ids = [b for b in buckets if f"{BUCKET_COL}={b}" in present]
+        if not ids:
+            return ids, None
+        return ids, (spark.read.option("mergeSchema", "true")
+                     .option("basePath", self.state_path)
+                     .parquet(*[os.path.join(self.state_path,
+                                             f"{BUCKET_COL}={b}")
+                                for b in ids]))
+
     def rebucket(self, spark: SparkSession, new_num_buckets: int) -> int:
         """Maintenance op: rewrite the whole store under a new bucket
         count (state growth outpacing N means per-bucket merge I/O
         creeps up — the SCALING.md "N ~ state_bytes /
         target_partition_bytes" knob, applied). Full rewrite by
         construction; returns the new N."""
+        self.fold(spark)
         self._resolve_buckets(spark)
         if not _fs_exists(spark, self.state_path):
             self.num_buckets = int(new_num_buckets)
@@ -126,31 +179,9 @@ class MergeCompactor:
                        batch.select(BUCKET_COL).distinct().collect()]
             if not touched:
                 return 0
-            if _fs_exists(spark, self.state_path):
-                # mergeSchema: after schema drift, buckets rewritten in
-                # different batches carry different file schemas; without
-                # it Spark infers from ONE arbitrary file and drifted
-                # columns silently vanish. The read lists the touched
-                # bucket DIRECTORIES explicitly (basePath keeps the
-                # partition column): a whole-table load + filter would
-                # run the mergeSchema footer job over EVERY bucket's
-                # files before pruning — measured as a full-store task
-                # wave per micro-batch on a 512-bucket state.
-                import os
-                paths = [p for p in
-                         (os.path.join(self.state_path,
-                                       f"{BUCKET_COL}={b}")
-                          for b in touched)
-                         if _fs_exists(spark, p)]
-                if paths:
-                    current = (spark.read.option("mergeSchema", "true")
-                               .option("basePath", self.state_path)
-                               .parquet(*paths))
-                    merged = union_epochs([current, batch])
-                else:
-                    merged = batch
-            else:
-                merged = batch
+            _, current = self.read_buckets(spark, touched)
+            merged = (batch if current is None
+                      else union_epochs([current, batch]))
             # ONE bucket exchange serves both the window dedup and the
             # write's bin-packing: the bucket id is a pure function of
             # the PK, so hash-partitioning on it co-locates every key's
@@ -173,12 +204,55 @@ class MergeCompactor:
             (compacted.write.partitionBy(BUCKET_COL)
              .option(_OVERWRITE_MODE_KEY.rsplit(".", 1)[-1], "dynamic")
              .mode("overwrite").parquet(self.state_path))
-            import os
             if _fs_read_text(spark, self._meta_path()) is None:
                 self._write_meta(spark)  # pin the layout at first write
             return len(touched)
         finally:
             batch.unpersist()
+
+    def stage(self, spark: SparkSession, batch_df: DataFrame) -> int:
+        """Write-behind upsert of one micro-batch: append its rows as a
+        pending delta under ``_delta/``, and :meth:`fold` once
+        ``COMPACT_FILES`` deltas are pending. The delta is committed
+        (its ``_SUCCESS`` marker written) before this returns. A store
+        with no base yet has nothing to rewrite, so the batch merges
+        directly. Returns the number of buckets rewritten (0 when the
+        batch was only appended)."""
+        if not _fs_exists(spark, self._meta_path()):
+            return self.merge(spark, batch_df)
+        path = os.path.join(self._delta_path(), uuid.uuid4().hex)
+        batch_df.write.parquet(path)
+        # our own commit marker: a session may switch Spark's off
+        _fs_touch(spark, os.path.join(path, "_SUCCESS"))
+        if len(_fs_list_names(spark, self._delta_path())) < COMPACT_FILES:
+            return 0
+        return self.fold(spark)
+
+    def _deltas(self, spark: SparkSession) -> DataFrame | None:
+        """Every committed pending delta as one frame (``None`` if there
+        is none). A crash mid-append leaves a delta directory without
+        ``_SUCCESS`` (only ``_temporary``): its micro-batch never
+        committed to the checkpoint and replays, so it is skipped."""
+        root = self._delta_path()
+        paths = [p for p in (os.path.join(root, n)
+                             for n in _fs_list_names(spark, root))
+                 if _fs_exists(spark, os.path.join(p, "_SUCCESS"))]
+        if not paths:
+            return None
+        return spark.read.option("mergeSchema", "true").parquet(*paths)
+
+    def fold(self, spark: SparkSession) -> int:
+        """Upsert every committed pending delta into the bucketed base
+        with ONE :meth:`merge`, then delete ``_delta/``. Idempotent: a
+        replayed batch staged twice, or a crash between the merge and
+        the delete, re-merges identical rows and dedup-latest keeps one.
+        Returns the number of buckets rewritten (0 with no delta)."""
+        if not _fs_exists(spark, self._delta_path()):
+            return 0
+        deltas = self._deltas(spark)
+        n = 0 if deltas is None else self.merge(spark, deltas)
+        _fs_delete(spark, self._delta_path())
+        return n
 
     def purge(self, spark: SparkSession, keys_df: DataFrame) -> int:
         """Right-to-be-forgotten erasure against the stored state: drop
@@ -187,24 +261,20 @@ class MergeCompactor:
         overwrite — untouched buckets' files are never opened, same
         contract as ``merge``). Returns the number of buckets rewritten.
         Erasure is physical: the rewritten files no longer contain the
-        rows, unlike a tombstone append."""
+        rows, unlike a tombstone append. Pending deltas fold first, or a
+        purged key would come back at the next fold."""
+        self.fold(spark)
         self._resolve_buckets(spark)
         keys = keys_df.select(*self.keys).distinct()
         keys.persist()
         try:
-            import os
             touched = [r[0] for r in
                        keys.select(self._bucket().alias("b"))
                            .distinct().collect()]
-            paths = [p for p in
-                     (os.path.join(self.state_path, f"{BUCKET_COL}={b}")
-                      for b in touched)
-                     if _fs_exists(spark, p)]
-            if not paths:
+            present, current = self.read_buckets(spark, touched)
+            if current is None:
                 return 0
-            current = (spark.read.option("mergeSchema", "true")
-                       .option("basePath", self.state_path)
-                       .parquet(*paths)).persist()
+            current = current.persist()
             kept = current.join(F.broadcast(keys), self.keys, "left_anti")
             # dynamic overwrite only rewrites partitions PRESENT in the
             # written data — a bucket whose every row is purged would
@@ -219,19 +289,11 @@ class MergeCompactor:
                  .mode("overwrite").parquet(self.state_path))
             finally:
                 current.unpersist()
-            emptied = [b for b in touched
-                       if b not in surviving
-                       and _fs_exists(spark,
-                                      os.path.join(self.state_path,
-                                                   f"{BUCKET_COL}={b}"))]
-            if emptied:
-                jvm = spark._jvm
-                conf = spark._jsc.hadoopConfiguration()
-                for b in emptied:
-                    p = jvm.org.apache.hadoop.fs.Path(
-                        os.path.join(self.state_path, f"{BUCKET_COL}={b}"))
-                    p.getFileSystem(conf).delete(p, True)
-            return len(paths)
+            for b in present:
+                if b not in surviving:
+                    _fs_delete(spark, os.path.join(self.state_path,
+                                                   f"{BUCKET_COL}={b}"))
+            return len(present)
         finally:
             keys.unpersist()
 
@@ -242,7 +304,9 @@ class MergeCompactor:
         means the bin-packing rewrite is being defeated; tombstone
         ratio drives retention compaction scheduling). One pruned scan;
         file attribution via the metadata column, no filesystem
-        listing loop."""
+        listing loop. Pending deltas fold first, so the report
+        describes the store a reader sees."""
+        self.fold(spark)
         df = (spark.read.option("mergeSchema", "true")
               .parquet(self.state_path))
         deleted = (F.col("__deleted").cast("int")
@@ -257,10 +321,16 @@ class MergeCompactor:
                 .orderBy("bucket"))
 
     def read(self, spark: SparkSession) -> DataFrame:
-        """The compacted table (bucket column dropped). mergeSchema keeps
-        post-drift columns visible regardless of which bucket's files the
-        schema would otherwise be inferred from; at very large state,
-        pass the registry's merged StructType via ``spark.read.schema``
-        instead to skip footer merging."""
-        return (spark.read.option("mergeSchema", "true")
+        """The compacted table (bucket column dropped), pending deltas
+        merged on read: the latest row per key over base and deltas, as
+        a :meth:`fold` would store it. mergeSchema keeps post-drift
+        columns visible regardless of which bucket's files the schema
+        would otherwise be inferred from; at very large state, pass the
+        registry's merged StructType via ``spark.read.schema`` instead
+        to skip footer merging."""
+        base = (spark.read.option("mergeSchema", "true")
                 .parquet(self.state_path).drop(BUCKET_COL))
+        deltas = self._deltas(spark)
+        if deltas is None:
+            return base
+        return dedup_latest(union_epochs([base, deltas]), self.keys)

@@ -39,9 +39,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
 from ..control import SNAPSHOT_MODES
-from ..fs import fs_exists, fs_list_names
+from ..fs import fs_exists, fs_list_names, fs_read_text, fs_write_text
 from ..model.envelope import OP_SNAPSHOT_READ, SYSTEM_COLUMNS as SC
-from ..sinks.merge import MergeCompactor
+from ..sinks.merge import BUCKET_COL, COMPACT_FILES, MergeCompactor
 from ..sources.events import (
     EVENTS_RAW_SCHEMA, PAYLOAD_COLS, _op_expr, ts_to_ns_factor,
 )
@@ -52,10 +52,6 @@ _POLL_INTERVAL_MS = 250
 # index's fixed horizon; the ANN index's default, which
 # ``BoundedStreamConfig.ann_marker_retain`` overrides)
 _MARKER_RETAIN = 64
-# ANN compaction-debt gate: data files per estimated index directory
-# before a fold — also the per-cell threshold that fold applies
-_ANN_COMPACT_FILES = 8
-
 
 @dataclass
 class BoundedStreamConfig:
@@ -524,8 +520,8 @@ def _maintain_ann_index(spark: SparkSession, idx, batch_df: DataFrame,
             # _epochs markers)
             est_dirs = idx.n_cells + idx.num_map_parts
             if (_data_file_debt(spark, cfg.ann_index_path)
-                    > _ANN_COMPACT_FILES * est_dirs):
-                idx.compact_cells(spark, file_threshold=_ANN_COMPACT_FILES)
+                    > COMPACT_FILES * est_dirs):
+                idx.compact_cells(spark, file_threshold=COMPACT_FILES)
             # scheduled retraining: a codebook pinned at epoch 0 skews
             # as the corpus drifts; rebuild is crash-safe (sibling
             # swap) and maintenance-idempotent — a replayed epoch just
@@ -899,16 +895,17 @@ def _start_drain(spark: SparkSession, stream: DataFrame, out_path: str,
     session-global; an unbound one would reset its idle clock on any
     concurrent query's progress).
 
-    A DEDUPE drain (``compactor`` set) upserts each micro-batch into the
-    bucketed compacted state — the same W1 operator as batch mode,
-    applied incrementally, with per-batch I/O proportional to the
-    touched buckets (see ``sinks.merge``) — or, with a maintained
-    ``view``, updates the view around that merge. It then runs each
-    ``side`` maintainer ``(table, fn)`` over its table's slice of the
-    batch (``table`` None: the whole batch). An APPEND drain writes the
-    stream as parquet under ``out_path``. A live drain polls for new
-    files every ``_POLL_INTERVAL_MS``; a bounded one drains under
-    ``Trigger.AvailableNow``."""
+    A DEDUPE drain (``compactor`` set) stages each micro-batch as a
+    pending delta of the bucketed compacted state, which the caller
+    folds when the drain closes (write-behind, see ``sinks.merge``).
+    Two kinds of drain read the store back inside the batch, so they
+    merge each micro-batch at once: a maintained ``view`` (updated
+    around that merge) and dedup groups (which read the compacted
+    corpus). It then runs each ``side`` maintainer ``(table, fn)`` over
+    its table's slice of the batch (``table`` None: the whole batch).
+    An APPEND drain writes the stream as parquet under ``out_path``. A
+    live drain polls for new files every ``_POLL_INTERVAL_MS``; a
+    bounded one drains under ``Trigger.AvailableNow``."""
     listener = _IdleStopListener()
     if compactor is not None:
         def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -922,8 +919,10 @@ def _start_drain(spark: SparkSession, stream: DataFrame, out_path: str,
             rows = batch_df.drop("_snapshot_phase")
             if view is not None:
                 view.update(spark, compactor, rows)
-            else:
+            elif cfg.dedup_groups_path:
                 compactor.merge(spark, rows)
+            else:
+                compactor.stage(spark, rows)
             for table, maintain in side:
                 part = batch_df if table is None else (
                     batch_df.filter(F.col("_table") == table).drop("_table"))
@@ -1006,9 +1005,11 @@ def bounded_sync(spark: SparkSession, events_dir: str, out_path: str,
 
     ``Trigger.AvailableNow`` drains everything present at start then
     stops (P6 semantics); the wall-clock and idle stops guard the drain
-    like the reference's poll loop. Returns run stats; ``batches``
-    counts the micro-batches this run committed, not the checkpoint's
-    lifetime total.
+    like the reference's poll loop. A DEDUPE drain folds its pending
+    deltas into the compacted store before it starts (leftovers of a
+    crashed run) and after it stops, so on return the store holds no
+    ``_delta/``. Returns run stats; ``batches`` counts the micro-batches
+    this run committed, not the checkpoint's lifetime total.
     """
     cfg = cfg or BoundedStreamConfig()
     _check_side_states(cfg)
@@ -1024,6 +1025,7 @@ def bounded_sync(spark: SparkSession, events_dir: str, out_path: str,
             view = StreamingAggView(cfg.view_path, keys,
                                     cfg.view_group_keys, cfg.view_measure)
         side = [(None, fn) for fn in _side_maintainers(cfg, compactor)]
+        compactor.fold(spark)
     committed = _last_commit(spark, checkpoint_dir)
     drain = _start_drain(spark, stream, out_path, checkpoint_dir, cfg,
                          compactor=compactor, view=view, side=side)
@@ -1031,6 +1033,8 @@ def bounded_sync(spark: SparkSession, events_dir: str, out_path: str,
         [stopped_reason] = _drive_drains([drain], cfg.max_duration_s)
     finally:
         _close_drains(spark, [drain])
+    if compactor is not None:
+        compactor.fold(spark)
     return {
         "stopped_reason": stopped_reason,
         "batches": _last_commit(spark, checkpoint_dir) - committed,
@@ -1099,7 +1103,10 @@ def bounded_sync_multi_fused(spark: SparkSession,
     union plan's source legs, which a file-source checkpoint cannot
     absorb; the new gid starts fresh and the keyed MERGE reconverges).
     ``fleet.json`` beside it maps groups to tables for readers
-    (:func:`read_fleet_table`). Snapshot-mode parity matches
+    (:func:`read_fleet_table`); it is written through the Hadoop FS
+    API, so any FS URI works. DEDUPE groups fold their pending deltas
+    before their query starts and after the fleet stops, as
+    :func:`bounded_sync` does. Snapshot-mode parity matches
     :func:`bounded_sync`: ``never``/``schema_only`` on a group's FIRST
     contact drains-and-commits without emitting rows.
 
@@ -1122,9 +1129,9 @@ def bounded_sync_multi_fused(spark: SparkSession,
         groups.setdefault(
             _fleet_group_key(spark, events_dirs[t], cfgs[t]), []).append(t)
 
-    os.makedirs(out_dir, exist_ok=True)
     manifest: dict[str, dict] = {}
     drains: list[_Drain] = []
+    compactors: list[MergeCompactor] = []
     max_duration = max(c.max_duration_s for c in cfgs.values())
     try:
         # group keys can mix None/int fields (max_files_per_trigger):
@@ -1160,6 +1167,8 @@ def bounded_sync_multi_fused(spark: SparkSession,
                 # equals its per-table twin's
                 side = [(t, fn) for t in tables
                         for fn in _side_maintainers(cfgs[t], compactor)]
+                compactor.fold(spark)
+                compactors.append(compactor)
             drains.append(_start_drain(
                 spark, stream, gpath, ckpt, cfg0, compactor=compactor,
                 side=side, partition_by="_table"))
@@ -1187,12 +1196,31 @@ def bounded_sync_multi_fused(spark: SparkSession,
         reasons = dict(zip(manifest, _drive_drains(drains, max_duration)))
     finally:
         _close_drains(spark, drains)
-
-    with open(os.path.join(out_dir, "fleet.json"), "w") as fh:
-        json.dump(manifest, fh, indent=2)
+    for compactor in compactors:
+        compactor.fold(spark)
+    fs_write_text(spark, os.path.join(out_dir, "fleet.json"),
+                  json.dumps(manifest, indent=2))
     return {"n_tables": len(cfgs), "n_queries": len(groups),
             "groups": {gi: m["tables"] for gi, m in manifest.items()},
             "stopped_reasons": reasons, "out_dir": out_dir}
+
+
+def _read_fleet_manifest(spark: SparkSession, out_dir: str) -> dict:
+    """``fleet.json`` of a :func:`bounded_sync_multi_fused` output."""
+    raw = fs_read_text(spark, os.path.join(out_dir, "fleet.json"))
+    if raw is None:
+        raise FileNotFoundError(f"no fleet.json under {out_dir}")
+    return json.loads(raw)
+
+
+def _group_compactor(spark: SparkSession, m: dict) -> MergeCompactor:
+    """The compactor of a stored DEDUPE group, keyed as its drain keyed
+    it (:func:`_merge_keys`); a no-PK group's key columns are read off
+    the stored schema."""
+    stored = (spark.read.option("mergeSchema", "true").parquet(m["path"])
+              .drop(BUCKET_COL) if not m["primary_keys"] else None)
+    return MergeCompactor(m["path"], _merge_keys(
+        stored, m["primary_keys"], ["_table"]))
 
 
 def purge_fleet_keys(spark: SparkSession, out_dir: str,
@@ -1215,8 +1243,7 @@ def purge_fleet_keys(spark: SparkSession, out_dir: str,
     groups dedupe on full payloads and have no stable erasure key —
     they are skipped and reported. Returns {group id: buckets
     rewritten} plus per-index erased-row counts and the skip lists."""
-    with open(os.path.join(out_dir, "fleet.json")) as fh:
-        manifest = json.load(fh)
+    manifest = _read_fleet_manifest(spark, out_dir)
     rewritten: dict = {}
     skipped: list[str] = []
     side_erased: dict = {}
@@ -1230,8 +1257,7 @@ def purge_fleet_keys(spark: SparkSession, out_dir: str,
                                        "_table string")
         keys = key_values.select(*pks).distinct().crossJoin(
             F.broadcast(tables))
-        comp = MergeCompactor(m["path"], ["_table", *pks])
-        rewritten[gid] = comp.purge(spark, keys)
+        rewritten[gid] = _group_compactor(spark, m).purge(spark, keys)
         for t, states in m.get("side_states", {}).items():
             for kind, st in states.items():
                 if st["id_col"] not in key_values.columns:
@@ -1265,18 +1291,15 @@ def read_fleet_table(spark: SparkSession, out_dir: str,
     e.g. snapshot_mode='never' on first contact — has no state
     directory yet; that reads as an empty (schema-less) frame, not a
     scan error."""
-    from ..sinks.merge import BUCKET_COL as _MERGE_BUCKET
-
-    with open(os.path.join(out_dir, "fleet.json")) as fh:
-        manifest = json.load(fh)
-    for m in manifest.values():
+    for m in _read_fleet_manifest(spark, out_dir).values():
         if table in m["tables"]:
             if not fs_exists(spark, m["path"]):
                 from pyspark.sql.types import StructType
                 return spark.createDataFrame([], StructType([]))
-            df = (spark.read.option("mergeSchema", "true")
-                  .option("basePath", m["path"]).parquet(m["path"])
-                  .filter(F.col("_table") == table).drop("_table"))
-            return df.drop(_MERGE_BUCKET) if _MERGE_BUCKET in df.columns \
-                else df
+            if m["mode"] == "DEDUPE":
+                df = _group_compactor(spark, m).read(spark)
+            else:
+                df = (spark.read.option("mergeSchema", "true")
+                      .option("basePath", m["path"]).parquet(m["path"]))
+            return df.filter(F.col("_table") == table).drop("_table")
     raise KeyError(f"table {table!r} not in fleet at {out_dir}")

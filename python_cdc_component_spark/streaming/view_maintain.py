@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from ..fs import fs_exists as _fs_exists
 from ..model.envelope import SYSTEM_COLUMNS as SC
 from ..operators.aggmv import DEC, merge_contributions, signed_contribution
-from ..sinks.merge import MergeCompactor
+from ..sinks.merge import BUCKET_COL, MergeCompactor
 
 
 @dataclass
@@ -55,29 +55,15 @@ class StreamingAggView:
         retract/add terms delta-priced at scale: without key-pruned
         reads the semi-join would scan all of state and the maintained
         view would only tie a full re-aggregate, not beat it."""
-        from ..sinks.merge import BUCKET_COL
         reader = spark.read.option("mergeSchema", "true")
-        if buckets is not None:
-            # enumerate the touched bucket DIRECTORIES instead of
-            # filtering after a whole-table load: ``mergeSchema`` reads
-            # every file footer of whatever it is pointed at (a
-            # 512-task job per read on a 512-bucket store — measured
-            # dominating the delta update), and listing only the
-            # touched dirs bounds both the footer merge and the scan.
-            import os
-            paths = [p for p in
-                     (os.path.join(compactor.state_path,
-                                   f"{BUCKET_COL}={b}") for b in buckets)
-                     if _fs_exists(spark, p)]
-            if not paths:
+        if buckets is None:
+            df = reader.parquet(compactor.state_path)
+        else:
+            _, df = compactor.read_buckets(spark, buckets)
+            if df is None:
                 # none of the touched buckets materialized yet (all-new
                 # keys): schema-correct empty frame
-                return (reader.parquet(compactor.state_path).limit(0)
-                        .drop(BUCKET_COL).filter(~F.col(SC.deleted)))
-            df = (reader.option("basePath", compactor.state_path)
-                  .parquet(*paths))
-        else:
-            df = reader.parquet(compactor.state_path)
+                df = reader.parquet(compactor.state_path).limit(0)
         return df.drop(BUCKET_COL).filter(~F.col(SC.deleted))
 
     def update(self, spark: SparkSession, compactor: MergeCompactor,

@@ -271,3 +271,111 @@ def test_merge_plan_one_shared_bucket_exchange(spark, sf_dir, tmp_path):
     # packing: every bucket dir holds exactly one live file per rewrite
     files = _bucket_files(state)
     assert files and all(len(v) == 1 for v in files.values())
+
+
+# --- write-behind: stage / fold / merge-on-read ---------------------------
+
+_ROW_SCHEMA = ("user_id long, v string, kbc__event_timestamp long, "
+               "kbc__file string, kbc__pos long, __deleted boolean")
+
+
+def _staged_store(spark, path):
+    """A 20-key store seeded through ``stage``: with no base yet the
+    first batch merges directly, so no delta is left behind."""
+    comp = MergeCompactor(path, ["user_id"], num_buckets=4)
+    comp.stage(spark, spark.createDataFrame(
+        [(i, "a", 1, "f", i, False) for i in range(20)], _ROW_SCHEMA))
+    assert not os.path.exists(os.path.join(path, "_delta"))
+    return comp
+
+
+def _sorted_rows(df):
+    cols = sorted(df.columns)
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def test_stage_read_merges_pending_deltas(spark, tmp_path):
+    """read() over two staged, unfolded deltas equals fold-then-read;
+    the fold leaves no _delta/ behind."""
+    path = str(tmp_path / "st")
+    comp = _staged_store(spark, path)
+    mk = lambda rows: spark.createDataFrame(rows, _ROW_SCHEMA)
+    assert comp.stage(spark, mk([(1, "b", 2, "f", 100, False),
+                                 (25, "new", 2, "f", 101, False)])) == 0
+    assert comp.stage(spark, mk([(1, "c", 3, "f", 102, False),
+                                 (2, "b", 3, "f", 103, True)])) == 0
+    assert len(os.listdir(os.path.join(path, "_delta"))) == 2
+    # a plain parquet read of the store still sees the base only
+    assert spark.read.parquet(path).count() == 20
+    pending = _sorted_rows(comp.read(spark))
+    assert comp.fold(spark) > 0
+    assert not os.path.exists(os.path.join(path, "_delta"))
+    assert _sorted_rows(comp.read(spark)) == pending
+    got = {r.user_id: (r.v, r["__deleted"])
+           for r in comp.read(spark).collect()}
+    assert len(got) == 21
+    assert got[1] == ("c", False) and got[2] == ("b", True)
+    assert got[25] == ("new", False)
+
+
+def test_stage_folds_once_compact_files_deltas_pend(spark, tmp_path):
+    from python_cdc_component_spark.sinks.merge import COMPACT_FILES
+    path = str(tmp_path / "st")
+    comp = _staged_store(spark, path)
+    for j in range(COMPACT_FILES - 1):
+        assert comp.stage(spark, spark.createDataFrame(
+            [(j, "u", 2, "f", 100 + j, False)], _ROW_SCHEMA)) == 0
+    assert len(os.listdir(os.path.join(path, "_delta"))) == COMPACT_FILES - 1
+    assert comp.stage(spark, spark.createDataFrame(
+        [(19, "u", 2, "f", 200, False)], _ROW_SCHEMA)) > 0
+    assert not os.path.exists(os.path.join(path, "_delta"))
+    assert (comp.read(spark).filter(F.col("v") == "u").count()
+            == COMPACT_FILES)
+
+
+def test_purge_with_pending_delta_stays_purged(spark, tmp_path):
+    """A purged key held by a pending delta must not come back at the
+    next fold: purge folds first."""
+    comp = _staged_store(spark, str(tmp_path / "st"))
+    comp.stage(spark, spark.createDataFrame(
+        [(3, "upd", 2, "f", 100, False)], _ROW_SCHEMA))
+    comp.purge(spark, spark.createDataFrame([(3,)], "user_id long"))
+    comp.fold(spark)
+    left = {r.user_id for r in comp.read(spark).collect()}
+    assert left == set(range(20)) - {3}
+
+
+def test_replayed_stage_folds_like_one(spark, tmp_path):
+    """A replayed micro-batch staged twice, then folded, stores exactly
+    what staging it once stores."""
+    batch = spark.createDataFrame(
+        [(1, "b", 2, "f", 100, False), (1, "c", 3, "f", 101, False),
+         (7, "d", 2, "f", 102, True), (30, "n", 2, "f", 103, False)],
+        _ROW_SCHEMA)
+    twice = _staged_store(spark, str(tmp_path / "twice"))
+    twice.stage(spark, batch)
+    twice.stage(spark, batch)
+    twice.fold(spark)
+    once = _staged_store(spark, str(tmp_path / "once"))
+    once.stage(spark, batch)
+    once.fold(spark)
+    assert _sorted_rows(twice.read(spark)) == _sorted_rows(once.read(spark))
+    assert twice.read(spark).count() == 21
+
+
+def test_fold_skips_uncommitted_delta(spark, tmp_path):
+    """A crash mid-append leaves a delta directory holding only the
+    committer's _temporary tree: neither read() nor fold() reads it,
+    and the fold removes it."""
+    path = str(tmp_path / "st")
+    comp = _staged_store(spark, path)
+    crashed = os.path.join(path, "_delta", "crashed", "_temporary", "0")
+    spark.createDataFrame([(5, "ghost", 9, "f", 999, False)],
+                          _ROW_SCHEMA).write.parquet(crashed)
+    comp.stage(spark, spark.createDataFrame(
+        [(6, "real", 2, "f", 100, False)], _ROW_SCHEMA))
+    for _ in range(2):   # merged on read, then folded
+        got = {r.user_id: r.v for r in comp.read(spark).collect()}
+        assert got[5] == "a" and got[6] == "real"
+        comp.fold(spark)
+    assert not os.path.exists(os.path.join(path, "_delta"))

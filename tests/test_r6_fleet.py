@@ -217,3 +217,31 @@ def test_purge_fleet_keys_erases_across_tables(spark, sf_dir):
             assert left.count() > 0
     finally:
         shutil.rmtree(work, ignore_errors=True)
+
+
+def test_fleet_on_file_uri_keeps_manifest_beside_groups(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """An ``out_dir`` given as a file:// URI: fleet.json goes through the
+    Hadoop FS and lands beside the group directories (a local open()
+    would write a CWD-relative ./file:/... tree instead), and
+    read_fleet_table reads the table back through it."""
+    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    src = str(tmp_path / "src" / "a")
+    raw.filter("event_id % 2 = 0").write.parquet(src)
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    out = tmp_path / "out"
+    stats = bounded_sync_multi_fused(
+        spark, {"a": src}, f"file://{out}", f"file://{tmp_path / 'ckpt'}",
+        {"a": BoundedStreamConfig(mode="DEDUPE", primary_keys=["user_id"],
+                                  max_wait_s=5)})
+    [gid] = stats["groups"]
+    assert os.path.isfile(out / "fleet.json")
+    assert os.path.isdir(out / f"group={gid}")
+    assert os.listdir(cwd) == []
+    got = read_fleet_table(spark, f"file://{out}", "a")
+    assert "_table" not in got.columns and "_kbc_bucket" not in got.columns
+    want = (raw.filter("event_id % 2 = 0").select("user_id")
+            .distinct().count())
+    assert got.count() == got.select("user_id").distinct().count() == want

@@ -84,3 +84,77 @@ def test_bounded_multi_batch_compaction(spark, sf_dir, tmp_path):
     expected = {(r.user_id, r[SC.pos])
                 for r in dedup_latest(ev, ["user_id"]).collect()}
     assert got == expected
+
+
+def _event_files(spark, sf_dir, dst, bounds):
+    """One parquet file per ``(lo, hi]`` event-id range, flat under
+    ``dst`` (a file-source directory)."""
+    import os
+    import tempfile
+    from python_cdc_component_spark.sources.events import read_events
+    raw = read_events(spark, sf_dir).select(
+        "event_id", F.col("ts_ns").alias("ts"), "user_id", "event_type",
+        "value", "props")
+    os.makedirs(dst)
+    stage = tempfile.mkdtemp(dir=os.path.dirname(dst))
+    for i, (lo, hi) in enumerate(bounds):
+        sub = os.path.join(stage, str(i))
+        (raw.filter((F.col("event_id") > lo) & (F.col("event_id") <= hi))
+         .coalesce(1).write.parquet(sub))
+        [f] = [f for f in os.listdir(sub) if f.endswith(".parquet")]
+        shutil.copy(os.path.join(sub, f),
+                    os.path.join(dst, f"part-{i}.parquet"))
+    shutil.rmtree(stage)
+
+
+def test_dedupe_drain_folds_once_at_close(spark, sf_dir, tmp_path,
+                                          monkeypatch):
+    """Write-behind: a 3-batch DEDUPE drain into a seeded store stages
+    each micro-batch as a delta and rewrites the store with ONE merge
+    at close; afterwards no _delta/ is left and the stored rows equal a
+    drain that merges every micro-batch."""
+    import os
+    from python_cdc_component_spark.sinks.merge import MergeCompactor
+    _event_files(spark, sf_dir, str(tmp_path / "seed"), [(-1, 400)])
+    _event_files(spark, sf_dir, str(tmp_path / "src"),
+                 [(400, 600), (600, 800), (800, 1000)])
+    cfg = lambda: BoundedStreamConfig(  # noqa: E731
+        mode="DEDUPE", primary_keys=["user_id"], max_files_per_trigger=1)
+    stores = {}
+    for name in ("staged", "per_batch"):
+        out = str(tmp_path / name)
+        bounded_sync(spark, str(tmp_path / "seed"), out,
+                     str(tmp_path / f"{name}_seed_ckpt"), cfg())
+        stores[name] = out
+
+    calls = []
+    merge = MergeCompactor.merge
+
+    def counting_merge(self, s, df):
+        calls.append(self.state_path)
+        return merge(self, s, df)
+
+    monkeypatch.setattr(MergeCompactor, "merge", counting_merge)
+    stats = bounded_sync(spark, str(tmp_path / "src"), stores["staged"],
+                         str(tmp_path / "staged_ckpt"), cfg())
+    assert stats["batches"] == 3
+    assert calls == [stores["staged"]]
+    assert not os.path.exists(os.path.join(stores["staged"], "_delta"))
+
+    # reference: the same drain merging every micro-batch
+    monkeypatch.setattr(MergeCompactor, "stage", MergeCompactor.merge)
+    bounded_sync(spark, str(tmp_path / "src"), stores["per_batch"],
+                 str(tmp_path / "per_batch_ckpt"), cfg())
+    assert len(calls) == 4
+
+    def rows(path):
+        df = spark.read.parquet(path)
+        cols = sorted(df.columns)
+        return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+    assert rows(stores["staged"]) == rows(stores["per_batch"])
+    expected = {(r.user_id, r[SC.pos]) for r in
+                dedup_latest(read_cdc_events(spark, sf_dir), ["user_id"])
+                .collect()}
+    assert {(r.user_id, r[SC.pos]) for r in
+            spark.read.parquet(stores["staged"]).collect()} == expected
