@@ -66,6 +66,20 @@ def fs_delete(spark: SparkSession, path: str) -> bool:
     return bool(fs.delete(jpath, True))
 
 
+def fs_delete_empty_dir(spark: SparkSession, path: str) -> bool:
+    """Delete the directory ``path`` only if it is empty (no-op if
+    absent or not empty): the filesystem itself refuses a
+    non-recursive delete of a non-empty directory, so a child another
+    writer creates meanwhile survives."""
+    from py4j.protocol import Py4JJavaError
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    try:
+        return bool(fs.delete(jpath, False))
+    except Py4JJavaError:
+        return False
+
+
 def fs_read_text(spark: SparkSession, path: str) -> str | None:
     """Read a small text file (meta/marker payloads) through the Hadoop
     FS API — ``None`` if absent. Local ``open()`` would silently miss

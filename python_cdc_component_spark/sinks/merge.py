@@ -21,15 +21,18 @@ own keys hash into, so ``merge``
 
 Per-drain I/O (write-behind). A hot-key micro-batch hashes into every
 bucket, so one ``merge`` per micro-batch rewrites the whole store per
-batch. A stream drain therefore calls ``stage``: each micro-batch is
-appended as one delta directory under ``_delta/`` — O(|batch|) written,
-committed before ``foreachBatch`` returns, so offsets never run ahead of
-durable output — and ``fold`` upserts every pending delta into the
-buckets with ONE ``merge``: when the drain closes, or as soon as
-``COMPACT_FILES`` (8) deltas are pending. A drain of k micro-batches
-pays k appends and one touched-bucket rewrite per fold, instead of k
-rewrites; a one-batch drain into an existing store pays one append and
-read-back more than a direct merge. ``read`` merges pending deltas on
+batch. A stream drain that can run more than one micro-batch (a live
+drain, or one with ``max_files_per_trigger``) therefore calls
+``stage``: each micro-batch is appended as one delta directory under
+``_delta/`` — O(|batch|) written, committed before ``foreachBatch``
+returns, so offsets never run ahead of durable output — and ``fold``
+upserts the committed deltas into the buckets with ONE ``merge``: when
+the drain closes, or as soon as 8 deltas are pending. A drain of k
+micro-batches pays k appends and one touched-bucket rewrite per fold,
+instead of k rewrites. A one-batch drain would pay one append and
+read-back more than a direct merge, so it merges directly. ``fold``
+deletes exactly the deltas it merged, so a delta committed meanwhile
+by a running drain stays pending. ``read`` merges pending deltas on
 read; Spark's file index hides ``_``-prefixed directories, so a plain
 parquet read of the store sees the folded base only. A fold is
 idempotent (dedup-latest over identical rows), so a replayed batch
@@ -60,6 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fs import fs_delete as _fs_delete
+from ..fs import fs_delete_empty_dir as _fs_delete_empty_dir
 from ..fs import fs_exists as _fs_exists
 from ..fs import fs_list_names as _fs_list_names
 from ..fs import fs_read_text as _fs_read_text
@@ -69,9 +73,9 @@ from ..operators.dedup import dedup_latest
 from ..operators.schema_align import union_epochs
 
 BUCKET_COL = "_kbc_bucket"
-# data files allowed to pile up before a fold: pending deltas here, data
-# files per index directory for the ANN index's cell compaction
-COMPACT_FILES = 8
+DELTA_DIR = "_delta"  # pending deltas; the "_" hides them from base reads
+# pending deltas that make ``stage`` fold
+_FOLD_DELTAS = 8
 _OVERWRITE_MODE_KEY = "spark.sql.sources.partitionOverwriteMode"
 
 
@@ -99,7 +103,7 @@ class MergeCompactor:
         return os.path.join(self.state_path, "_meta.json")
 
     def _delta_path(self) -> str:
-        return os.path.join(self.state_path, "_delta")
+        return os.path.join(self.state_path, DELTA_DIR)
 
     def _resolve_buckets(self, spark: SparkSession) -> int:
         """Layout-resolved bucket count: the stored N wins over the
@@ -213,7 +217,7 @@ class MergeCompactor:
     def stage(self, spark: SparkSession, batch_df: DataFrame) -> int:
         """Write-behind upsert of one micro-batch: append its rows as a
         pending delta under ``_delta/``, and :meth:`fold` once
-        ``COMPACT_FILES`` deltas are pending. The delta is committed
+        ``_FOLD_DELTAS`` deltas are pending. The delta is committed
         (its ``_SUCCESS`` marker written) before this returns. A store
         with no base yet has nothing to rewrite, so the batch merges
         directly. Returns the number of buckets rewritten (0 when the
@@ -224,33 +228,52 @@ class MergeCompactor:
         batch_df.write.parquet(path)
         # our own commit marker: a session may switch Spark's off
         _fs_touch(spark, os.path.join(path, "_SUCCESS"))
-        if len(_fs_list_names(spark, self._delta_path())) < COMPACT_FILES:
+        if len(_fs_list_names(spark, self._delta_path())) < _FOLD_DELTAS:
             return 0
         return self.fold(spark)
 
-    def _deltas(self, spark: SparkSession) -> DataFrame | None:
-        """Every committed pending delta as one frame (``None`` if there
-        is none). A crash mid-append leaves a delta directory without
-        ``_SUCCESS`` (only ``_temporary``): its micro-batch never
-        committed to the checkpoint and replays, so it is skipped."""
+    def _deltas(self, spark: SparkSession
+                ) -> tuple[list[str], DataFrame | None]:
+        """The committed pending deltas: ``(their directories, their
+        rows as one frame)``, rows ``None`` if there is none. A delta
+        directory without ``_SUCCESS`` is skipped: it is still being
+        written, or a crash mid-append left it (only ``_temporary``),
+        and then its micro-batch never committed to the checkpoint and
+        replays."""
         root = self._delta_path()
         paths = [p for p in (os.path.join(root, n)
                              for n in _fs_list_names(spark, root))
                  if _fs_exists(spark, os.path.join(p, "_SUCCESS"))]
         if not paths:
-            return None
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+            return paths, None
+        return paths, spark.read.option("mergeSchema", "true").parquet(*paths)
 
     def fold(self, spark: SparkSession) -> int:
         """Upsert every committed pending delta into the bucketed base
-        with ONE :meth:`merge`, then delete ``_delta/``. Idempotent: a
-        replayed batch staged twice, or a crash between the merge and
-        the delete, re-merges identical rows and dedup-latest keeps one.
-        Returns the number of buckets rewritten (0 with no delta)."""
+        with ONE :meth:`merge`, then delete exactly those deltas (and
+        ``_delta/`` once it is empty). A delta another writer commits
+        or is still writing meanwhile stays pending, so a fold may run
+        beside a live drain. Idempotent: a replayed batch staged twice,
+        or a crash between the merge and the delete, re-merges
+        identical rows and dedup-latest keeps one. Returns the number of
+        buckets rewritten (0 with no delta)."""
         if not _fs_exists(spark, self._delta_path()):
             return 0
-        deltas = self._deltas(spark)
+        paths, deltas = self._deltas(spark)
         n = 0 if deltas is None else self.merge(spark, deltas)
+        for p in paths:
+            _fs_delete(spark, p)
+        _fs_delete_empty_dir(spark, self._delta_path())
+        return n
+
+    def settle(self, spark: SparkSession) -> int:
+        """:meth:`fold` at a drain boundary — before the drain's query
+        starts or after it stopped, when nothing stages into the store
+        — then drop the uncommitted deltas a crashed or stopped
+        micro-batch left: that batch never committed to the checkpoint
+        and replays. Leaves no ``_delta/``. Returns the buckets
+        rewritten."""
+        n = self.fold(spark)
         _fs_delete(spark, self._delta_path())
         return n
 
@@ -304,17 +327,23 @@ class MergeCompactor:
         means the bin-packing rewrite is being defeated; tombstone
         ratio drives retention compaction scheduling). One pruned scan;
         file attribution via the metadata column, no filesystem
-        listing loop. Pending deltas fold first, so the report
-        describes the store a reader sees."""
-        self.fold(spark)
-        df = (spark.read.option("mergeSchema", "true")
-              .parquet(self.state_path))
-        deleted = (F.col("__deleted").cast("int")
-                   if "__deleted" in df.columns else F.lit(0))
-        return (df.select(F.col(BUCKET_COL).alias("bucket"),
-                          F.col("_metadata.file_path").alias("_f"),
-                          deleted.alias("_d"))
-                .groupBy("bucket")
+        listing loop. Read-only: the rows and files of pending deltas
+        count towards the buckets their keys hash into, as the debt the
+        next fold clears."""
+        def rows(df: DataFrame, bucket: F.Column) -> DataFrame:
+            deleted = (F.col("__deleted").cast("int")
+                       if "__deleted" in df.columns else F.lit(0))
+            return df.select(bucket.alias("bucket"),
+                             F.col("_metadata.file_path").alias("_f"),
+                             deleted.alias("_d"))
+
+        scan = rows(spark.read.option("mergeSchema", "true")
+                    .parquet(self.state_path), F.col(BUCKET_COL))
+        _, deltas = self._deltas(spark)
+        if deltas is not None:
+            self._resolve_buckets(spark)  # a delta implies _meta.json
+            scan = scan.unionByName(rows(deltas, self._bucket()))
+        return (scan.groupBy("bucket")
                 .agg(F.countDistinct("_f").alias("n_files"),
                      F.count(F.lit(1)).alias("n_rows"),
                      F.sum("_d").cast("long").alias("n_tombstones"))
@@ -330,7 +359,7 @@ class MergeCompactor:
         to skip footer merging."""
         base = (spark.read.option("mergeSchema", "true")
                 .parquet(self.state_path).drop(BUCKET_COL))
-        deltas = self._deltas(spark)
+        _, deltas = self._deltas(spark)
         if deltas is None:
             return base
         return dedup_latest(union_epochs([base, deltas]), self.keys)

@@ -41,7 +41,7 @@ from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 from ..control import SNAPSHOT_MODES
 from ..fs import fs_exists, fs_list_names, fs_read_text, fs_write_text
 from ..model.envelope import OP_SNAPSHOT_READ, SYSTEM_COLUMNS as SC
-from ..sinks.merge import BUCKET_COL, COMPACT_FILES, MergeCompactor
+from ..sinks.merge import BUCKET_COL, DELTA_DIR, MergeCompactor
 from ..sources.events import (
     EVENTS_RAW_SCHEMA, PAYLOAD_COLS, _op_expr, ts_to_ns_factor,
 )
@@ -52,6 +52,10 @@ _POLL_INTERVAL_MS = 250
 # index's fixed horizon; the ANN index's default, which
 # ``BoundedStreamConfig.ann_marker_retain`` overrides)
 _MARKER_RETAIN = 64
+# ANN compaction-debt gate: data files per estimated index directory
+# before a fold — also the per-cell threshold that fold applies
+_ANN_COMPACT_FILES = 8
+
 
 @dataclass
 class BoundedStreamConfig:
@@ -520,8 +524,8 @@ def _maintain_ann_index(spark: SparkSession, idx, batch_df: DataFrame,
             # _epochs markers)
             est_dirs = idx.n_cells + idx.num_map_parts
             if (_data_file_debt(spark, cfg.ann_index_path)
-                    > COMPACT_FILES * est_dirs):
-                idx.compact_cells(spark, file_threshold=COMPACT_FILES)
+                    > _ANN_COMPACT_FILES * est_dirs):
+                idx.compact_cells(spark, file_threshold=_ANN_COMPACT_FILES)
             # scheduled retraining: a codebook pinned at epoch 0 skews
             # as the corpus drifts; rebuild is crash-safe (sibling
             # swap) and maintenance-idempotent — a replayed epoch just
@@ -895,19 +899,25 @@ def _start_drain(spark: SparkSession, stream: DataFrame, out_path: str,
     session-global; an unbound one would reset its idle clock on any
     concurrent query's progress).
 
-    A DEDUPE drain (``compactor`` set) stages each micro-batch as a
-    pending delta of the bucketed compacted state, which the caller
-    folds when the drain closes (write-behind, see ``sinks.merge``).
-    Two kinds of drain read the store back inside the batch, so they
-    merge each micro-batch at once: a maintained ``view`` (updated
-    around that merge) and dedup groups (which read the compacted
-    corpus). It then runs each ``side`` maintainer ``(table, fn)`` over
+    A DEDUPE drain (``compactor`` set) that can run more than one
+    micro-batch (live, or ``max_files_per_trigger`` set) stages each
+    micro-batch as a pending delta of the bucketed compacted state,
+    which the caller folds when the drain closes (write-behind, see
+    ``sinks.merge``). A one-batch drain merges its batch directly, as
+    staging would only add a delta write and read-back. Two kinds of
+    drain read the store back inside the batch, so they merge each
+    micro-batch at once too: a maintained ``view`` (updated around
+    that merge) and dedup groups (which read the compacted corpus).
+    It then runs each ``side`` maintainer ``(table, fn)`` over
     its table's slice of the batch (``table`` None: the whole batch).
     An APPEND drain writes the stream as parquet under ``out_path``. A
     live drain polls for new files every ``_POLL_INTERVAL_MS``; a
     bounded one drains under ``Trigger.AvailableNow``."""
     listener = _IdleStopListener()
     if compactor is not None:
+        write_behind = (view is None and not cfg.dedup_groups_path
+                        and bool(cfg.live or cfg.max_files_per_trigger))
+
         def sink(batch_df: DataFrame, batch_id: int) -> None:
             if cfg.live:
                 # T3 gate: while the latest micro-batch still carried
@@ -919,10 +929,10 @@ def _start_drain(spark: SparkSession, stream: DataFrame, out_path: str,
             rows = batch_df.drop("_snapshot_phase")
             if view is not None:
                 view.update(spark, compactor, rows)
-            elif cfg.dedup_groups_path:
-                compactor.merge(spark, rows)
-            else:
+            elif write_behind:
                 compactor.stage(spark, rows)
+            else:
+                compactor.merge(spark, rows)
             for table, maintain in side:
                 part = batch_df if table is None else (
                     batch_df.filter(F.col("_table") == table).drop("_table"))
@@ -1005,11 +1015,12 @@ def bounded_sync(spark: SparkSession, events_dir: str, out_path: str,
 
     ``Trigger.AvailableNow`` drains everything present at start then
     stops (P6 semantics); the wall-clock and idle stops guard the drain
-    like the reference's poll loop. A DEDUPE drain folds its pending
-    deltas into the compacted store before it starts (leftovers of a
-    crashed run) and after it stops, so on return the store holds no
-    ``_delta/``. Returns run stats; ``batches`` counts the micro-batches
-    this run committed, not the checkpoint's lifetime total.
+    like the reference's poll loop. A DEDUPE drain settles its store
+    (:meth:`MergeCompactor.settle`: pending deltas folded, uncommitted
+    ones dropped) before it starts (leftovers of a crashed run) and
+    after it stops, so on return the store holds no ``_delta/``.
+    Returns run stats; ``batches`` counts the micro-batches this run
+    committed, not the checkpoint's lifetime total.
     """
     cfg = cfg or BoundedStreamConfig()
     _check_side_states(cfg)
@@ -1025,7 +1036,7 @@ def bounded_sync(spark: SparkSession, events_dir: str, out_path: str,
             view = StreamingAggView(cfg.view_path, keys,
                                     cfg.view_group_keys, cfg.view_measure)
         side = [(None, fn) for fn in _side_maintainers(cfg, compactor)]
-        compactor.fold(spark)
+        compactor.settle(spark)
     committed = _last_commit(spark, checkpoint_dir)
     drain = _start_drain(spark, stream, out_path, checkpoint_dir, cfg,
                          compactor=compactor, view=view, side=side)
@@ -1034,7 +1045,7 @@ def bounded_sync(spark: SparkSession, events_dir: str, out_path: str,
     finally:
         _close_drains(spark, [drain])
     if compactor is not None:
-        compactor.fold(spark)
+        compactor.settle(spark)
     return {
         "stopped_reason": stopped_reason,
         "batches": _last_commit(spark, checkpoint_dir) - committed,
@@ -1104,7 +1115,7 @@ def bounded_sync_multi_fused(spark: SparkSession,
     absorb; the new gid starts fresh and the keyed MERGE reconverges).
     ``fleet.json`` beside it maps groups to tables for readers
     (:func:`read_fleet_table`); it is written through the Hadoop FS
-    API, so any FS URI works. DEDUPE groups fold their pending deltas
+    API, so any FS URI works. DEDUPE groups settle their stores
     before their query starts and after the fleet stops, as
     :func:`bounded_sync` does. Snapshot-mode parity matches
     :func:`bounded_sync`: ``never``/``schema_only`` on a group's FIRST
@@ -1167,7 +1178,7 @@ def bounded_sync_multi_fused(spark: SparkSession,
                 # equals its per-table twin's
                 side = [(t, fn) for t in tables
                         for fn in _side_maintainers(cfgs[t], compactor)]
-                compactor.fold(spark)
+                compactor.settle(spark)
                 compactors.append(compactor)
             drains.append(_start_drain(
                 spark, stream, gpath, ckpt, cfg0, compactor=compactor,
@@ -1197,7 +1208,7 @@ def bounded_sync_multi_fused(spark: SparkSession,
     finally:
         _close_drains(spark, drains)
     for compactor in compactors:
-        compactor.fold(spark)
+        compactor.settle(spark)
     fs_write_text(spark, os.path.join(out_dir, "fleet.json"),
                   json.dumps(manifest, indent=2))
     return {"n_tables": len(cfgs), "n_queries": len(groups),
@@ -1296,10 +1307,13 @@ def read_fleet_table(spark: SparkSession, out_dir: str,
             if not fs_exists(spark, m["path"]):
                 from pyspark.sql.types import StructType
                 return spark.createDataFrame([], StructType([]))
-            if m["mode"] == "DEDUPE":
+            if m["mode"] == "DEDUPE" and fs_exists(
+                    spark, os.path.join(m["path"], DELTA_DIR)):
+                # deltas pend only while a drain runs or after a crash
                 df = _group_compactor(spark, m).read(spark)
             else:
                 df = (spark.read.option("mergeSchema", "true")
-                      .option("basePath", m["path"]).parquet(m["path"]))
+                      .option("basePath", m["path"]).parquet(m["path"])
+                      .drop(BUCKET_COL))
             return df.filter(F.col("_table") == table).drop("_table")
     raise KeyError(f"table {table!r} not in fleet at {out_dir}")

@@ -319,7 +319,8 @@ def test_stage_read_merges_pending_deltas(spark, tmp_path):
 
 
 def test_stage_folds_once_compact_files_deltas_pend(spark, tmp_path):
-    from python_cdc_component_spark.sinks.merge import COMPACT_FILES
+    from python_cdc_component_spark.sinks.merge import (
+        _FOLD_DELTAS as COMPACT_FILES)
     path = str(tmp_path / "st")
     comp = _staged_store(spark, path)
     for j in range(COMPACT_FILES - 1):
@@ -366,7 +367,8 @@ def test_replayed_stage_folds_like_one(spark, tmp_path):
 def test_fold_skips_uncommitted_delta(spark, tmp_path):
     """A crash mid-append leaves a delta directory holding only the
     committer's _temporary tree: neither read() nor fold() reads it,
-    and the fold removes it."""
+    and fold() leaves it in place (it may still be being written);
+    settle() at a drain boundary drops it."""
     path = str(tmp_path / "st")
     comp = _staged_store(spark, path)
     crashed = os.path.join(path, "_delta", "crashed", "_temporary", "0")
@@ -378,4 +380,52 @@ def test_fold_skips_uncommitted_delta(spark, tmp_path):
         got = {r.user_id: r.v for r in comp.read(spark).collect()}
         assert got[5] == "a" and got[6] == "real"
         comp.fold(spark)
+    assert os.listdir(os.path.join(path, "_delta")) == ["crashed"]
+    assert comp.settle(spark) == 0
     assert not os.path.exists(os.path.join(path, "_delta"))
+    assert {r.user_id: r.v for r in comp.read(spark).collect()}[5] == "a"
+
+
+def test_fold_keeps_delta_committed_during_its_merge(spark, tmp_path):
+    """A delta a running drain commits while a fold merges was never
+    read by that fold: it must stay pending, not be deleted unmerged."""
+    path = str(tmp_path / "st")
+    comp = _staged_store(spark, path)
+    comp.stage(spark, spark.createDataFrame(
+        [(1, "folded", 2, "f", 100, False)], _ROW_SCHEMA))
+    late = MergeCompactor(path, ["user_id"])
+
+    class Racing(MergeCompactor):
+        def merge(self, s, df):
+            n = super().merge(s, df)
+            late.stage(s, s.createDataFrame(
+                [(2, "late", 3, "f", 101, False)], _ROW_SCHEMA))
+            return n
+
+    racing = Racing(path, ["user_id"])
+    assert racing.fold(spark) > 0
+    assert len(os.listdir(os.path.join(path, "_delta"))) == 1
+    got = {r.user_id: r.v for r in comp.read(spark).collect()}
+    assert got[1] == "folded" and got[2] == "late"
+    comp.fold(spark)
+    assert not os.path.exists(os.path.join(path, "_delta"))
+    got = {r.user_id: r.v for r in spark.read.parquet(path).collect()}
+    assert got[1] == "folded" and got[2] == "late"
+
+
+def test_health_counts_pending_deltas_without_folding(spark, tmp_path):
+    """health() writes nothing: a pending delta stays pending, and its
+    rows and file count towards the buckets its keys hash into."""
+    path = str(tmp_path / "st")
+    comp = _staged_store(spark, path)
+    comp.stage(spark, spark.createDataFrame(
+        [(1, "b", 2, "f", 100, False), (2, "b", 2, "f", 101, True)],
+        _ROW_SCHEMA))
+    before = _bucket_files(path)
+    h = comp.health(spark).collect()
+    assert len(os.listdir(os.path.join(path, "_delta"))) == 1
+    assert _bucket_files(path) == before
+    assert sum(r["n_rows"] for r in h) == 22
+    assert sum(r["n_tombstones"] for r in h) == 1
+    # one file per base bucket, plus the delta's file(s) where 1 and 2 land
+    assert sum(r["n_files"] for r in h) > len(before)

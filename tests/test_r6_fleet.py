@@ -245,3 +245,44 @@ def test_fleet_on_file_uri_keeps_manifest_beside_groups(
     want = (raw.filter("event_id % 2 = 0").select("user_id")
             .distinct().count())
     assert got.count() == got.select("user_id").distinct().count() == want
+
+
+def test_read_fleet_table_merges_pending_deltas(spark, sf_dir, tmp_path):
+    """While deltas pend (a running drain staged them), read_fleet_table
+    merges them on read, keyed as the group's drain keys it: a PK
+    group's newer row wins, and a no-PK group's replayed row is read
+    once."""
+    from python_cdc_component_spark.sinks.merge import (
+        BUCKET_COL, MergeCompactor)
+    from python_cdc_component_spark.model.envelope import (
+        SYSTEM_COLUMNS as SC)
+    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    dirs = {}
+    for i, t in enumerate(["pk", "nopk"]):
+        dirs[t] = str(tmp_path / "src" / t)
+        raw.filter(F.col("event_id") % 2 == i).limit(60).write.parquet(
+            dirs[t])
+    cfgs = {"pk": BoundedStreamConfig(mode="DEDUPE",
+                                      primary_keys=["user_id"],
+                                      max_wait_s=5),
+            "nopk": BoundedStreamConfig(mode="DEDUPE", primary_keys=[],
+                                        max_wait_s=5)}
+    out = str(tmp_path / "out")
+    stats = bounded_sync_multi_fused(spark, dirs, out,
+                                     str(tmp_path / "ckpt"), cfgs)
+    before = {t: read_fleet_table(spark, out, t) for t in cfgs}
+    counts = {t: df.count() for t, df in before.items()}
+    for gid, [t] in stats["groups"].items():
+        gpath = os.path.join(out, f"group={gid}")
+        row = spark.read.parquet(gpath).drop(BUCKET_COL).limit(1)
+        if t == "pk":
+            victim = row.first()["user_id"]
+            row = (row.withColumn(SC.pos, F.col(SC.pos) + 10**9)
+                   .withColumn("event_type", F.lit("staged")))
+        MergeCompactor(gpath, ["_table"]).stage(spark, row)
+        assert os.path.isdir(os.path.join(gpath, "_delta"))
+    pk = read_fleet_table(spark, out, "pk")
+    assert pk.count() == counts["pk"]
+    assert [r.event_type for r in
+            pk.filter(F.col("user_id") == victim).collect()] == ["staged"]
+    assert read_fleet_table(spark, out, "nopk").count() == counts["nopk"]

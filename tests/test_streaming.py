@@ -158,3 +158,33 @@ def test_dedupe_drain_folds_once_at_close(spark, sf_dir, tmp_path,
                 .collect()}
     assert {(r.user_id, r[SC.pos]) for r in
             spark.read.parquet(stores["staged"]).collect()} == expected
+
+
+def test_one_batch_dedupe_drain_merges_directly(spark, sf_dir, tmp_path,
+                                                monkeypatch):
+    """A drain that runs one micro-batch (AvailableNow, no
+    max_files_per_trigger) into an existing store merges it at once:
+    staging would only add a delta write and read-back."""
+    import os
+    from python_cdc_component_spark.sinks.merge import MergeCompactor
+    _event_files(spark, sf_dir, str(tmp_path / "seed"), [(-1, 400)])
+    _event_files(spark, sf_dir, str(tmp_path / "src"),
+                 [(400, 700), (700, 1000)])
+    cfg = BoundedStreamConfig(mode="DEDUPE", primary_keys=["user_id"])
+    out = str(tmp_path / "state")
+    bounded_sync(spark, str(tmp_path / "seed"), out,
+                 str(tmp_path / "seed_ckpt"), cfg)
+
+    def no_stage(self, s, df):
+        raise AssertionError("a one-batch drain must not stage")
+
+    monkeypatch.setattr(MergeCompactor, "stage", no_stage)
+    stats = bounded_sync(spark, str(tmp_path / "src"), out,
+                         str(tmp_path / "ckpt"), cfg)
+    assert stats["batches"] == 1
+    assert not os.path.exists(os.path.join(out, "_delta"))
+    expected = {(r.user_id, r[SC.pos]) for r in
+                dedup_latest(read_cdc_events(spark, sf_dir), ["user_id"])
+                .collect()}
+    assert {(r.user_id, r[SC.pos]) for r in
+            spark.read.parquet(out).collect()} == expected
