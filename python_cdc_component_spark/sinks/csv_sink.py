@@ -55,6 +55,15 @@ def write_csv(df: DataFrame, path: str, columns: list[str] | None = None,
     # coalesce(n) already yields min(n, partitions), while reading
     # df.rdd.getNumPartitions() under AQE materialises the shuffle map
     # stage in a job of its own that the write then runs again.
+    # coalesce(n) is narrow, so it also pulls everything above the last
+    # exchange into n tasks: over a DEDUPE plan, the window's Sort and
+    # Window run in n reduce tasks (one, for any table under a slice).
+    # It stays: splitting the write from the window needs a shuffle, a
+    # third Spark job per sync, and letting AQE size the slices writes
+    # one file per coalesced partition, more than min(n, partitions).
+    # On snapshot_compact (4-core VM, seed 7, 4 interleaved pairs) AQE
+    # sizing took sync_s from 0.635 to 0.587 s (median) and wrote 2
+    # files instead of 1.
     n = _estimate_partitions(df, target_slice_bytes)
     if n is not None:
         df = df.coalesce(n)

@@ -12,12 +12,24 @@ on the primary key (``_kbc_bucket = pmod(xxhash64(pk...), N)`` as a
 partition directory). A batch can only change rows in the buckets its
 own keys hash into, so ``merge``
 
-1. computes the batch's touched bucket ids (a <=N-int driver scalar),
+1. computes the batch's touched bucket ids (a <=N-int driver scalar)
+   in ONE Spark job: the batch is persisted and written to a ``noop``
+   sink with an observed ``collect_set`` of its bucket ids, so the job
+   that fills the cache also returns the ids,
 2. reads ONLY those bucket directories back (``read_buckets``),
 3. window-dedups batch+bucket rows per key (same W1 operator as batch
-   mode), and
+   mode) on the write's own bucket exchange, and
 4. rewrites ONLY the touched buckets via dynamic partition overwrite —
    untouched buckets' files are never opened or rewritten.
+
+Steps 3-4 shuffle on the bucket id with an EXPLICIT width,
+``min(touched, defaultParallelism)`` reduce tasks. Without a count, AQE
+coalescing (``parallelismFirst`` with a 1 MB ``minPartitionSize``)
+folds a small bucket shuffle into one task, which then sorts, dedups
+and writes every touched bucket's file in turn on one core; a
+repartition with an explicit count is never coalesced. Each bucket
+still lands wholly in one task, so a rewrite leaves one file per
+bucket. ``purge`` and ``rebucket`` rewrite through the same helper.
 
 Per-drain I/O (write-behind). A hot-key micro-batch hashes into every
 bucket, so one ``merge`` per micro-batch rewrites the whole store per
@@ -59,7 +71,7 @@ import os
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..fs import fs_delete as _fs_delete
@@ -77,6 +89,18 @@ DELTA_DIR = "_delta"  # pending deltas; the "_" hides them from base reads
 # pending deltas that make ``stage`` fold
 _FOLD_DELTAS = 8
 _OVERWRITE_MODE_KEY = "spark.sql.sources.partitionOverwriteMode"
+
+
+def _observed_buckets(df: DataFrame, write) -> list[int]:
+    """Run ``write`` over ``df`` and return the distinct bucket ids of
+    the rows it wrote, observed during that same job."""
+    seen = Observation()
+    write(df.observe(seen, F.collect_set(BUCKET_COL).alias("b")))
+    return sorted(seen.get["b"])
+
+
+def _noop_write(df: DataFrame) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
 
 @dataclass
@@ -160,17 +184,56 @@ class MergeCompactor:
         if not _fs_exists(spark, self.state_path):
             self.num_buckets = int(new_num_buckets)
             return self.num_buckets
+        old = [int(n.split("=", 1)[1])
+               for n in _fs_list_names(spark, self.state_path)
+               if n.startswith(f"{BUCKET_COL}=")]
         cur = (spark.read.option("mergeSchema", "true")
                .option("basePath", self.state_path)
                .parquet(self.state_path).drop(BUCKET_COL))
         self.num_buckets = int(new_num_buckets)
+        # pinned before the overwrite: the rows come from the files it
+        # replaces
         out = (cur.withColumn(BUCKET_COL, self._bucket())
-                  .repartition(F.col(BUCKET_COL))
                   .localCheckpoint(eager=True))
-        (out.write.partitionBy(BUCKET_COL)
-            .mode("overwrite").parquet(self.state_path))
+        self._rewrite(spark, out,
+                      sorted(set(old) | set(range(self.num_buckets))))
         self._write_meta(spark)
         return self.num_buckets
+
+    def _rewrite(self, spark: SparkSession, rows: DataFrame,
+                 buckets: list[int], dedup: bool = False) -> None:
+        """Replace the named ``buckets`` of the store with ``rows``
+        (bucket column set), latest row per key first when ``dedup``.
+        A named bucket that ``rows`` leave empty is deleted: dynamic
+        overwrite only replaces the partitions present in the written
+        data, so it would keep its old files."""
+        # An explicit width, or AQE coalesces a small bucket shuffle
+        # into ONE task that sorts, dedups and writes every bucket's
+        # file in turn; a repartition with a count is never coalesced.
+        # The bucket id is a pure function of the PK, so this ONE
+        # exchange also serves the window dedup: a window partitioned
+        # by (bucket, *pk) rides it via the subset rule instead of
+        # adding its own PK exchange. Each bucket lands wholly in one
+        # writer task — one file per rewritten bucket.
+        width = min(len(buckets), spark.sparkContext.defaultParallelism)
+        rows = rows.repartition(width, F.col(BUCKET_COL))
+        if dedup:
+            rows = dedup_latest(rows, [BUCKET_COL, *self.keys])
+        # WRITER-level dynamic overwrite, never the session conf:
+        # inside foreachBatch the plan runs on the micro-batch's
+        # CLONED session whose SQLConf was frozen at stream start — a
+        # conf set here on the outer session never reaches it, the
+        # overwrite silently degrades to static, and every bucket the
+        # batch did NOT touch is wiped (reproduced: two single-key
+        # batches, 64 buckets -> first key lost).
+        written = _observed_buckets(
+            rows, lambda df: (df.write.partitionBy(BUCKET_COL)
+                              .option(_OVERWRITE_MODE_KEY.rsplit(".", 1)[-1],
+                                      "dynamic")
+                              .mode("overwrite").parquet(self.state_path)))
+        for b in set(buckets) - set(written):
+            _fs_delete(spark, os.path.join(self.state_path,
+                                           f"{BUCKET_COL}={b}"))
 
     def merge(self, spark: SparkSession, batch_df: DataFrame) -> int:
         """Upsert one batch into the compacted state. Returns the number
@@ -179,35 +242,14 @@ class MergeCompactor:
         batch = batch_df.withColumn(BUCKET_COL, self._bucket())
         batch.persist()
         try:
-            touched = [r[0] for r in
-                       batch.select(BUCKET_COL).distinct().collect()]
+            # one job: fills the cache and observes the bucket ids
+            touched = _observed_buckets(batch, _noop_write)
             if not touched:
                 return 0
             _, current = self.read_buckets(spark, touched)
             merged = (batch if current is None
                       else union_epochs([current, batch]))
-            # ONE bucket exchange serves both the window dedup and the
-            # write's bin-packing: the bucket id is a pure function of
-            # the PK, so hash-partitioning on it co-locates every key's
-            # rows, and a window partitioned by (bucket, *pk) rides the
-            # established partitioning via the subset rule instead of
-            # adding its own PK exchange (the same shared-exchange
-            # pattern as q2/q21). Bin-packing is unchanged — each
-            # bucket still lands wholly in one writer task, one file
-            # per rewritten bucket — while the second full pass of the
-            # compacted bytes over the wire is gone.
-            merged = merged.repartition(F.col(BUCKET_COL))
-            compacted = dedup_latest(merged, [BUCKET_COL, *self.keys])
-            # WRITER-level dynamic overwrite, never the session conf:
-            # inside foreachBatch the plan runs on the micro-batch's
-            # CLONED session whose SQLConf was frozen at stream start —
-            # a conf set here on the outer session never reaches it, the
-            # overwrite silently degrades to static, and every bucket
-            # the batch did NOT touch is wiped (reproduced: two
-            # single-key batches, 64 buckets -> first key lost).
-            (compacted.write.partitionBy(BUCKET_COL)
-             .option(_OVERWRITE_MODE_KEY.rsplit(".", 1)[-1], "dynamic")
-             .mode("overwrite").parquet(self.state_path))
+            self._rewrite(spark, merged, touched, dedup=True)
             if _fs_read_text(spark, self._meta_path()) is None:
                 self._write_meta(spark)  # pin the layout at first write
             return len(touched)
@@ -288,34 +330,16 @@ class MergeCompactor:
         purged key would come back at the next fold."""
         self.fold(spark)
         self._resolve_buckets(spark)
-        keys = keys_df.select(*self.keys).distinct()
+        keys = (keys_df.select(*self.keys).distinct()
+                .withColumn(BUCKET_COL, self._bucket()))
         keys.persist()
         try:
-            touched = [r[0] for r in
-                       keys.select(self._bucket().alias("b"))
-                           .distinct().collect()]
+            touched = _observed_buckets(keys, _noop_write)
             present, current = self.read_buckets(spark, touched)
             if current is None:
                 return 0
-            current = current.persist()
             kept = current.join(F.broadcast(keys), self.keys, "left_anti")
-            # dynamic overwrite only rewrites partitions PRESENT in the
-            # written data — a bucket whose every row is purged would
-            # silently keep its old files; delete those dirs explicitly
-            surviving = {r[0] for r in
-                         kept.select(BUCKET_COL).distinct().collect()}
-            try:
-                # writer-level dynamic overwrite (see merge())
-                (kept.repartition(F.col(BUCKET_COL))
-                 .write.partitionBy(BUCKET_COL)
-                 .option(_OVERWRITE_MODE_KEY.rsplit(".", 1)[-1], "dynamic")
-                 .mode("overwrite").parquet(self.state_path))
-            finally:
-                current.unpersist()
-            for b in present:
-                if b not in surviving:
-                    _fs_delete(spark, os.path.join(self.state_path,
-                                                   f"{BUCKET_COL}={b}"))
+            self._rewrite(spark, kept, present)
             return len(present)
         finally:
             keys.unpersist()

@@ -75,6 +75,8 @@ class StreamingAggView:
         batch_df = batch_df.persist()
         try:
             touched = batch_df.select(*self.pk).distinct()
+            # the store's N, not the caller's: bucket under its layout
+            compactor._resolve_buckets(spark)
             tb = [r[0] for r in batch_df
                   .select(compactor._bucket().alias("b")).distinct().collect()]
             parts: list[DataFrame] = []

@@ -1,5 +1,7 @@
 import os
 import sys
+import time
+import uuid
 
 import pytest
 
@@ -19,3 +21,30 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def jobs_run_by(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` starts, in start order, counted in
+    a job group of its own. Job events reach the status tracker
+    asynchronously, so the ids are read once every job of the group has
+    ended and two reads agree."""
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    last, deadline = None, time.time() + 30
+    while time.time() < deadline:
+        ids = sorted(tracker.getJobIdsForGroup(group))
+        infos = [tracker.getJobInfo(i) for i in ids]
+        if ids == last and all(
+                i is not None and i.status in ("SUCCEEDED", "FAILED")
+                for i in infos):
+            break
+        last = ids
+        time.sleep(0.2)
+    return last

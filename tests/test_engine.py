@@ -6,6 +6,7 @@ import os
 from pyspark.sql import types as T
 
 import __spark_entry__ as entry
+from conftest import jobs_run_by
 from python_cdc_component_spark.engine import SyncConfig, sync
 from python_cdc_component_spark.model.schema import TableSchema
 from python_cdc_component_spark.sinks.csv_sink import write_csv
@@ -345,36 +346,6 @@ def test_sync_multi_fused_hetero_mixed_schema_fleet(spark, sf_dir,
         assert plan_summary(res).shuffles == 1
 
 
-def _jobs_run_by(spark, fn) -> int:
-    """Number of Spark jobs ``fn()`` starts, counted in a job group of
-    its own. Job events reach the status tracker asynchronously, so the
-    count is read once every job of the group has ended and two reads
-    agree."""
-    import time
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"job-budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job budget")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    tracker = sc.statusTracker()
-    last, deadline = None, time.time() + 30
-    while time.time() < deadline:
-        ids = sorted(tracker.getJobIdsForGroup(group))
-        infos = [tracker.getJobInfo(i) for i in ids]
-        if ids == last and all(
-                i is not None and i.status in ("SUCCEEDED", "FAILED")
-                for i in infos):
-            break
-        last = ids
-        time.sleep(0.2)
-    return len(last)
-
-
 def test_sync_job_budget(spark, sf_dir, tmp_path):
     """A DEDUPE sync is one execution of its plan: the dedup window's
     shuffle map stage plus the write, on both sinks. The end offsets
@@ -383,7 +354,8 @@ def test_sync_job_budget(spark, sf_dir, tmp_path):
     for fmt in ("csv", "parquet"):
         out = str(tmp_path / fmt)
         cfg = SyncConfig(mode="DEDUPE", output_format=fmt)
-        jobs = _jobs_run_by(spark, lambda: sync(spark, sf_dir, out, cfg))
+        jobs = len(jobs_run_by(spark,
+                                lambda: sync(spark, sf_dir, out, cfg)))
         assert 1 <= jobs <= 2, (fmt, jobs)
         st = RunState.load(os.path.join(out, "state.json"))
         assert st.offsets["events"]["pos"] is not None

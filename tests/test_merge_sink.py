@@ -7,6 +7,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from conftest import jobs_run_by
 from python_cdc_component_spark.operators.dedup import dedup_latest
 from python_cdc_component_spark.sinks.merge import BUCKET_COL, MergeCompactor
 from python_cdc_component_spark.sources.events import read_cdc_events
@@ -244,6 +245,13 @@ def test_merge_bucket_count_is_layout_pinned_and_rebucketable(
     assert c.num_buckets == 32
     upd = spark.read.parquet(path).filter(F.col("k") == 5).collect()
     assert len(upd) == 1 and upd[0]["v"] == "updated"
+    # shrinking deletes the buckets the narrower layout no longer uses
+    assert c.rebucket(spark, 4) == 4
+    assert {d for d in os.listdir(path) if d.startswith(f"{BUCKET_COL}=")
+            } <= {f"{BUCKET_COL}={b}" for b in range(4)}
+    state = spark.read.parquet(path)
+    assert state.count() == 100
+    assert state.filter(F.col("k") == 5).collect()[0]["v"] == "updated"
 
 
 def test_merge_plan_one_shared_bucket_exchange(spark, sf_dir, tmp_path):
@@ -429,3 +437,71 @@ def test_health_counts_pending_deltas_without_folding(spark, tmp_path):
     assert sum(r["n_tombstones"] for r in h) == 1
     # one file per base bucket, plus the delta's file(s) where 1 and 2 land
     assert sum(r["n_files"] for r in h) > len(before)
+
+
+# --- rewrite width and job budgets ---------------------------------------
+
+def _result_tasks(spark, job_id):
+    """Tasks of the job's result stage, its last stage."""
+    tracker = spark.sparkContext.statusTracker()
+    stage = max(tracker.getJobInfo(job_id).stageIds)
+    return tracker.getStageInfo(stage).numTasks
+
+
+def test_merge_job_budget_and_rewrite_width(spark, sf_dir, tmp_path):
+    """A merge into a seeded store runs four jobs: the touched-bucket
+    probe (which also fills the batch cache), the read-back's schema
+    merge, and the rewrite's shuffle map and result stages. The rewrite
+    writes on min(touched, cores) tasks — AQE must not coalesce the
+    small bucket shuffle into one task that writes every file in
+    turn."""
+    ev = read_cdc_events(spark, sf_dir)
+    c = MergeCompactor(str(tmp_path / "st"), ["user_id"], num_buckets=8)
+    c.merge(spark, ev)
+    batch = ev.filter(F.col("user_id") % 2 == 0)
+    touched = batch.select(c._bucket()).distinct().count()
+    width = min(touched, spark.sparkContext.defaultParallelism)
+    assert width > 1
+    jobs = jobs_run_by(spark, lambda: c.merge(spark, batch))
+    assert _result_tasks(spark, jobs[-1]) == width
+    assert len(jobs) <= 4, jobs
+    assert all(len(v) == 1 for v in _bucket_files(str(tmp_path / "st"))
+               .values())
+
+
+def test_fold_keeps_one_file_per_bucket(spark, tmp_path):
+    """A fold rewrites over several writer tasks and still leaves one
+    file in every bucket."""
+    comp = _staged_store(spark, str(tmp_path / "st"))
+    for j in range(3):
+        comp.stage(spark, spark.createDataFrame(
+            [(i, f"u{j}", 2 + j, "f", 100 * j + i, False)
+             for i in range(0, 24, 2)], _ROW_SCHEMA))
+    assert comp.fold(spark) == 4
+    h = comp.health(spark).collect()
+    assert len(h) == 4 and all(r["n_files"] == 1 for r in h), h
+    assert comp.read(spark).count() == 22
+
+
+def test_purge_job_budget_deletes_emptied_bucket(spark, tmp_path):
+    """purge observes its touched and surviving buckets during jobs it
+    runs anyway, instead of collecting them in jobs of their own (7
+    jobs here, where two distinct().collect() probes took 12); a bucket
+    whose every row is purged is still deleted."""
+    path = str(tmp_path / "st")
+    comp = MergeCompactor(path, ["user_id"], num_buckets=8)
+    comp.merge(spark, spark.createDataFrame(
+        [(i, "a", 1, "f", i, False) for i in range(40)], _ROW_SCHEMA))
+    bucket = {r["user_id"]: r["b"] for r in
+              spark.range(40).withColumnRenamed("id", "user_id")
+              .select("user_id", comp._bucket().alias("b")).collect()}
+    victims = [u for u, b in bucket.items() if b == bucket[0]]
+    other = next(u for u, b in bucket.items() if b != bucket[0])
+    keys = spark.createDataFrame([(u,) for u in victims + [other]],
+                                 "user_id long")
+    jobs = jobs_run_by(spark, lambda: comp.purge(spark, keys))
+    assert len(jobs) <= 7, jobs
+    assert not os.path.exists(
+        os.path.join(path, f"{BUCKET_COL}={bucket[0]}"))
+    left = {r.user_id for r in comp.read(spark).collect()}
+    assert left == set(range(40)) - set(victims) - {other}

@@ -117,3 +117,47 @@ def test_bounded_sync_maintains_view_end_to_end(spark, sf_dir, tmp_path):
                                   s + Decimal(str(round(r["value"], 6))))
     truth = {k: (n, float(s)) for k, (n, s) in truth.items()}
     assert got == truth
+
+
+def test_view_drain_into_store_of_other_bucket_count(spark, sf_dir,
+                                                     tmp_path):
+    """A view drained with the default 32 buckets into a store built
+    with 4 must retract from the store's own buckets: the touched
+    buckets are computed under the layout's N, not the caller's, or the
+    first micro-batch's retract reads the wrong directories and the
+    view double-counts the keys it updates."""
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+    from python_cdc_component_spark.sources.events import read_events
+    from python_cdc_component_spark.streaming.bounded import (
+        BoundedStreamConfig, bounded_sync)
+
+    raw = read_events(spark, sf_dir).select(
+        "event_id", F.col("ts_ns").alias("ts"), "user_id", "event_type",
+        "value", "props")
+    src, stage = str(tmp_path / "src"), str(tmp_path / "stage")
+    os.makedirs(src)
+    comp_path, view_path = str(tmp_path / "state"), str(tmp_path / "view")
+    ckpt = str(tmp_path / "ckpt")
+    for i, (lo, hi, n) in enumerate([(-1, 500, 4), (500, 1000, 32)]):
+        sub = os.path.join(stage, str(i))
+        (raw.filter((F.col("event_id") > lo) & (F.col("event_id") <= hi))
+         .coalesce(1).write.parquet(sub))
+        [f] = [f for f in os.listdir(sub) if f.endswith(".parquet")]
+        shutil.copy(os.path.join(sub, f),
+                    os.path.join(src, f"part-{i}.parquet"))
+        bounded_sync(spark, src, comp_path, ckpt, BoundedStreamConfig(
+            mode="DEDUPE", primary_keys=["user_id"], num_state_buckets=n,
+            view_path=view_path, view_group_keys=["event_type"],
+            view_measure="value"))
+    comp = MergeCompactor(comp_path, ["user_id"])
+    comp._resolve_buckets(spark)
+    assert comp.num_buckets == 4
+    view = StreamingAggView(view_path, ["user_id"], ["event_type"], "value")
+    got = {r["event_type"]: (r["n_rows"], r["sum_value"])
+           for r in view.read_view(spark).collect()}
+    want = {r["event_type"]: (r["n_rows"], r["sum_value"])
+            for r in view.recompute(spark, comp).collect()}
+    assert got == want
