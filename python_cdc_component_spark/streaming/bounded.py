@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
 from ..control import SNAPSHOT_MODES
+from ..engine import schema_fingerprint
 from ..fs import fs_exists, fs_list_names, fs_read_text, fs_write_text
 from ..model.envelope import OP_SNAPSHOT_READ, SYSTEM_COLUMNS as SC
 from ..sinks.merge import BUCKET_COL, DELTA_DIR, MergeCompactor
@@ -1067,9 +1068,7 @@ def _fleet_group_key(spark: SparkSession, events_dir: str,
     (e.g. one table ``snapshot_mode='never'``, another ``'initial'``
     in the same group). ``max_duration_s`` stays fleet-shared by
     design (the documented fleet-max wall-clock guard)."""
-    st = spark.read.parquet(events_dir).schema
-    fp = tuple(sorted((f.name, f.dataType.simpleString())
-                      for f in st.fields))
+    fp = schema_fingerprint(spark.read.parquet(events_dir))
     return (fp, cfg.mode.upper(), tuple(cfg.primary_keys or ()),
             cfg.snapshot_mode, cfg.num_state_buckets,
             cfg.max_files_per_trigger, cfg.live, cfg.max_wait_s)
@@ -1079,7 +1078,7 @@ def bounded_sync_multi_fused(spark: SparkSession,
                              events_dirs: dict[str, str],
                              out_dir: str, checkpoint_root: str,
                              cfgs: dict[str, BoundedStreamConfig]) -> dict:
-    """Streaming twin of ``engine.sync_multi_fused_hetero`` (VERDICT r5
+    """Streaming twin of ``engine.sync_multi_fused`` (VERDICT r5
     #6): drain a FLEET of bounded CDC streams in O(#fusion groups)
     streaming queries instead of one query per table.
 

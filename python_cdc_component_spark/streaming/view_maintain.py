@@ -32,7 +32,8 @@ from pyspark.sql import functions as F
 from ..fs import fs_exists as _fs_exists
 from ..model.envelope import SYSTEM_COLUMNS as SC
 from ..operators.aggmv import DEC, merge_contributions, signed_contribution
-from ..sinks.merge import BUCKET_COL, MergeCompactor
+from ..sinks.merge import (BUCKET_COL, MergeCompactor, _noop_write,
+                           _observed_buckets)
 
 
 @dataclass
@@ -75,10 +76,12 @@ class StreamingAggView:
         batch_df = batch_df.persist()
         try:
             touched = batch_df.select(*self.pk).distinct()
-            # the store's N, not the caller's: bucket under its layout
+            # the store's N, not the caller's: bucket under its layout;
+            # one job observes the touched buckets and fills the cache
             compactor._resolve_buckets(spark)
-            tb = [r[0] for r in batch_df
-                  .select(compactor._bucket().alias("b")).distinct().collect()]
+            tb = _observed_buckets(
+                batch_df.withColumn(BUCKET_COL, compactor._bucket()),
+                _noop_write)
             parts: list[DataFrame] = []
             if _fs_exists(spark, self.view_path):
                 parts.append(

@@ -277,8 +277,9 @@ def test_sync_multi_fused_matches_per_table_loop(spark, sf_dir, tmp_path):
     loop_state = RunState()
     sync_multi(spark, multi, str(tmp_path / "loop"), cfgs, loop_state)
     fused_state = RunState()
-    fused = sync_multi_fused(spark, multi, str(tmp_path / "fused"), cfgs,
-                             fused_state)
+    [fused] = sync_multi_fused(
+        spark, {t: multi.filter(F.col("_table") == t) for t in cfgs},
+        str(tmp_path / "fused"), cfgs, fused_state).values()
 
     for t in cfgs:
         a = {(r["user_id"], r[SC.POS]) for r in
@@ -297,8 +298,7 @@ def test_sync_multi_fused_matches_per_table_loop(spark, sf_dir, tmp_path):
     assert s.shuffles == 1
 
 
-def test_sync_multi_fused_hetero_mixed_schema_fleet(spark, sf_dir,
-                                                    tmp_path):
+def test_sync_multi_fused_mixed_schema_fleet(spark, sf_dir, tmp_path):
     """VERDICT r4 #8: a mixed-schema fleet fuses per schema-fingerprint
     group — O(#schemas) jobs — and every table's rows, offsets, and
     manifest match the per-table plan it would get from the loop path.
@@ -306,7 +306,7 @@ def test_sync_multi_fused_hetero_mixed_schema_fleet(spark, sf_dir,
     from pyspark.sql import functions as F
 
     from python_cdc_component_spark.engine import (
-        SyncConfig, plan_table, schema_fingerprint, sync_multi_fused_hetero)
+        SyncConfig, plan_table, schema_fingerprint, sync_multi_fused)
     from python_cdc_component_spark.model.envelope import (
         SYSTEM_COLUMNS as SC)
     from python_cdc_component_spark.sources.events import read_cdc_events
@@ -323,12 +323,12 @@ def test_sync_multi_fused_hetero_mixed_schema_fleet(spark, sf_dir,
             for t in fleet}
 
     state = RunState()
-    results = sync_multi_fused_hetero(spark, fleet, str(tmp_path / "het"),
-                                      cfgs, state)
-    # exactly 2 fingerprint groups → 2 fused jobs
+    results = sync_multi_fused(spark, fleet, str(tmp_path / "het"), cfgs,
+                               state)
+    # exactly 2 fingerprint groups of the output schema → 2 fused jobs
     assert len(results) == 2
-    assert {schema_fingerprint(fleet["wide_a"]),
-            schema_fingerprint(fleet["slim_c"])} == set(results)
+    assert {schema_fingerprint(plan_table(fleet[t], cfgs[t]))
+            for t in ("wide_a", "slim_c")} == set(results)
 
     out = spark.read.parquet(str(tmp_path / "het" / "tables"))
     for t, src in fleet.items():
@@ -430,3 +430,153 @@ def test_write_csv_slice_count(spark, tmp_path):
     # the three targets cover n == 1, 1 < n < k and n > k
     assert 1 < _estimate_partitions(df, 40_000) < k
     assert _estimate_partitions(df, 1_000) > k
+
+
+def _stage_log(spark, sf_dir, root, max_pos=None) -> str:
+    """An event-log dir holding the events of ``sf_dir`` up to
+    ``kbc__pos`` (the event id) ``max_pos``; ``None`` keeps them all."""
+    from pyspark.sql import functions as F
+    from python_cdc_component_spark.sources.events import read_events
+
+    raw = read_events(spark, sf_dir).select(
+        "event_id", F.col("ts_ns").alias("ts"), "user_id", "event_type",
+        "value", "props")
+    if max_pos is not None:
+        raw = raw.filter(F.col("event_id") <= max_pos)
+    raw.coalesce(1).write.parquet(os.path.join(root, "events.parquet"))
+    return root
+
+
+def _two_tables(spark, log):
+    """The log's events split into tab_a (click/view) and tab_b (rest)."""
+    from pyspark.sql import functions as F
+    from python_cdc_component_spark.sources.events import read_cdc_events
+
+    return read_cdc_events(spark, log).withColumn(
+        "_table", F.when(F.col("event_type").isin("click", "view"), "tab_a")
+                   .otherwise("tab_b"))
+
+
+def test_chained_multi_table_runs_emit_only_new_events(spark, sf_dir,
+                                                       tmp_path):
+    """Both multi-table paths stream past each table's stored offsets:
+    run 1 syncs the log cut at ``kbc__pos <= 500``, run 2 the full log
+    with run 1's state, and run 2 writes exactly the plan of the events
+    past run 1's offsets, per table. A run 3 over the same full log has
+    nothing new and leaves no table output behind."""
+    from pyspark.sql import functions as F
+    from python_cdc_component_spark.engine import (
+        plan_table, sync_multi, sync_multi_fused)
+    from python_cdc_component_spark.model.envelope import SYSTEM_COLUMNS as SC
+
+    cut, full = (_two_tables(spark, _stage_log(spark, sf_dir,
+                                               str(tmp_path / name), top))
+                 for name, top in (("cut", 500), ("full", None)))
+    cfgs = {"tab_a": SyncConfig(mode="DEDUPE"),
+            "tab_b": SyncConfig(mode="APPEND")}
+
+    def slices(ev):
+        return {t: ev.filter(F.col("_table") == t) for t in cfgs}
+
+    for fused in (False, True):
+        out, state = str(tmp_path / f"out_fused_{fused}"), RunState()
+        for ev in (cut, full):
+            first = dict(state.offsets)
+            if fused:
+                sync_multi_fused(spark, slices(ev), out, cfgs, state)
+            else:
+                sync_multi(spark, ev, out, cfgs, state)
+        for t, cfg in cfgs.items():
+            src = slices(full)[t]
+            new = src.filter(F.col(SC.pos) > first[t]["pos"]).drop("_table")
+            want = sorted(r[SC.POS] for r in plan_table(new, cfg).collect())
+            got = (spark.read.parquet(os.path.join(out, "tables"))
+                   .filter(F.col("_table") == t) if fused
+                   else spark.read.parquet(os.path.join(out, t)))
+            assert want, t                   # events past the cut exist
+            assert sorted(r[SC.POS] for r in got.collect()) == want, \
+                (fused, t)
+            assert state.offsets[t]["pos"] == src.agg(
+                F.max(SC.pos)).collect()[0][0]
+
+        if fused:
+            sync_multi_fused(spark, slices(full), out, cfgs, state)
+            assert not any(os.path.exists(os.path.join(
+                out, "tables", f"_table={t}")) for t in cfgs)
+        else:
+            sync_multi(spark, full, out, cfgs, state)
+            assert all(spark.read.parquet(os.path.join(out, t)).isEmpty()
+                       for t in cfgs)
+
+
+def _manifest_sans_table(path: str) -> dict:
+    """A manifest without the ``_table`` column that ``sync`` keeps."""
+    with open(path) as fh:
+        doc = json.load(fh)
+    doc["columns"] = [c for c in doc["columns"] if c != "_table"]
+    doc["schema"] = [c for c in doc["schema"] if c["name"] != "_table"]
+    return doc
+
+
+def test_sync_paths_agree_across_snapshot_modes(spark, sf_dir, tmp_path):
+    """Every batch sync path gives the same answer for the same log,
+    config and stored state: over two chained runs (the log cut at
+    ``kbc__pos <= 500``, then the full log) ``sync``, a one-table
+    ``sync_multi`` and ``sync_multi_fused`` agree on rows, offsets and
+    manifest, for each snapshot mode and load type."""
+    from python_cdc_component_spark.engine import sync_multi, sync_multi_fused
+    from python_cdc_component_spark.sources.events import read_cdc_events
+
+    logs = [_stage_log(spark, sf_dir, str(tmp_path / name), top)
+            for name, top in (("cut", 500), ("full", None))]
+
+    def run(path, log, out, cfg, state):
+        if path == "sync":
+            return sync(spark, log, out, cfg, state)["events"]
+        ev, cfgs = read_cdc_events(spark, log), {"events": cfg}
+        if path == "multi":
+            return sync_multi(spark, ev, out, cfgs, state)["events"]
+        [res] = sync_multi_fused(spark, {"events": ev}, out, cfgs,
+                                 state).values()
+        return res
+
+    paths = ("sync", "multi", "fused")
+    for snap in ("initial", "never", "when_needed"):
+        for mode in ("APPEND", "DEDUPE"):
+            cfg = SyncConfig(mode=mode, snapshot_mode=snap)
+            states = {p: RunState() for p in paths}
+            for i, log in enumerate(logs):
+                got = {}
+                for p in paths:
+                    out = str(tmp_path / f"{snap}_{mode}_{p}")
+                    res = run(p, log, out, cfg, states[p]).drop("_table")
+                    cols = sorted(res.columns)
+                    got[p] = (sorted(tuple(r) for r in
+                                     res.select(*cols).collect()),
+                              dict(states[p].offsets),
+                              _manifest_sans_table(
+                                  os.path.join(out, "events.manifest")))
+                assert got["multi"] == got["sync"], (snap, mode, i)
+                assert got["fused"] == got["sync"], (snap, mode, i)
+
+
+def test_sync_multi_fused_job_budget(spark, sf_dir, tmp_path):
+    """A fused write is one execution of its plan: the window's shuffle
+    map stage plus the partitioned write, for a DEDUPE and an APPEND
+    table at once. Every table's end offsets come from that write; a
+    second pass for a per-table offsets aggregate fails here."""
+    from pyspark.sql import functions as F
+    from python_cdc_component_spark.engine import sync_multi_fused
+    from python_cdc_component_spark.model.envelope import SYSTEM_COLUMNS as SC
+
+    ev = _two_tables(spark, sf_dir)
+    cfgs = {"tab_a": SyncConfig(mode="DEDUPE"),
+            "tab_b": SyncConfig(mode="APPEND")}
+    slices = {t: ev.filter(F.col("_table") == t) for t in cfgs}
+    state = RunState()
+    jobs = len(jobs_run_by(spark, lambda: sync_multi_fused(
+        spark, slices, str(tmp_path / "out"), cfgs, state)))
+    assert 1 <= jobs <= 2, jobs
+    for t, src in slices.items():
+        assert state.offsets[t]["pos"] == src.agg(
+            F.max(SC.pos)).collect()[0][0]

@@ -286,3 +286,19 @@ def test_read_fleet_table_merges_pending_deltas(spark, sf_dir, tmp_path):
     assert [r.event_type for r in
             pk.filter(F.col("user_id") == victim).collect()] == ["staged"]
     assert read_fleet_table(spark, out, "nopk").count() == counts["nopk"]
+
+
+def test_fleet_group_id_is_stable(spark, sf_dir, tmp_path):
+    """A group's id is an md5 of its group key, so the key's schema
+    fingerprint must not change for a source without ``_table``: a
+    changed tuple would start every existing fleet checkpoint afresh.
+    The id is pinned to the value the fleet has always given this
+    source and config."""
+    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    src = str(tmp_path / "src" / "a")
+    raw.filter("event_id % 2 = 0").write.parquet(src)
+    stats = bounded_sync_multi_fused(
+        spark, {"a": src}, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        {"a": BoundedStreamConfig(mode="DEDUPE", primary_keys=["user_id"],
+                                  max_wait_s=5)})
+    assert stats["groups"] == {"3840c78c5fee": ["a"]}

@@ -161,3 +161,25 @@ def test_view_drain_into_store_of_other_bucket_count(spark, sf_dir,
     want = {r["event_type"]: (r["n_rows"], r["sum_value"])
             for r in view.recompute(spark, comp).collect()}
     assert got == want
+
+
+def test_view_update_job_budget(spark, tmp_path):
+    """A view update finds its touched buckets with one job that also
+    fills the persisted batch's cache: the second update of two 14-row
+    batches into an 8-bucket store starts at most 19 Spark jobs (a
+    select-distinct probe over the batch took 21), and the view still
+    equals a recompute."""
+    from conftest import jobs_run_by
+
+    comp = MergeCompactor(str(tmp_path / "state"), ["user_id"],
+                          num_buckets=8)
+    view = StreamingAggView(str(tmp_path / "view"), ["user_id"], ["grp"],
+                            "value")
+    first = [(u, f"g{u % 3}", u * 0.5, 10, u, False) for u in range(14)]
+    second = [(u, f"g{u % 4}", u * 0.25, 20, 100 + u, u % 5 == 0)
+              for u in range(7, 21)]
+    view.update(spark, comp, _batch(spark, first))
+    batch = _batch(spark, second)
+    jobs = len(jobs_run_by(spark, lambda: view.update(spark, comp, batch)))
+    assert jobs <= 19, jobs
+    assert _snap(view.read_view(spark)) == _snap(view.recompute(spark, comp))
