@@ -40,6 +40,7 @@ from pyspark.sql import SparkSession
 
 from .control import SNAPSHOT_MODES
 from .engine import SyncConfig
+from .fs import fs_read_text, fs_write_text
 from .sinks.state import RunState
 from .streaming.bounded import BoundedStreamConfig
 
@@ -206,20 +207,15 @@ def run_component(spark: SparkSession, data_dir: str,
             return {"tables": cfg.tables or ["events"]}
         raise ValueError(f"unknown action {cfg.action!r}")
 
-    state = RunState()
-    in_state = os.path.join(data_dir, "in", "state.json")
-    if os.path.exists(in_state):
-        with open(in_state) as fh:
-            state, _ = RunState.from_reference_doc(json.load(fh))
-
-    out_tables = os.path.join(data_dir, "out", "tables")
-    os.makedirs(out_tables, exist_ok=True)
-    results = sync(spark, source_dir, out_tables,
+    raw = fs_read_text(spark, os.path.join(data_dir, "in", "state.json"))
+    state = (RunState() if raw is None
+             else RunState.from_reference_doc(json.loads(raw))[0])
+    results = sync(spark, source_dir, os.path.join(data_dir, "out", "tables"),
                    cfg=to_sync_config(cfg), state=state)
 
     out_state = os.path.join(data_dir, "out", "state.json")
-    with open(out_state, "w") as fh:
-        json.dump(state.to_reference_doc(), fh, indent=2)
+    fs_write_text(spark, out_state,
+                  json.dumps(state.to_reference_doc(), indent=2))
     return {"tables": {t: df.columns for t, df in results.items()},
             "state_path": out_state}
 
@@ -244,14 +240,12 @@ def run_component_streaming(spark: SparkSession, data_dir: str,
     ckpt = os.path.join(data_dir, "out", "checkpoint")
     if len(cfg.tables) > 1:
         out_root = os.path.join(data_dir, "out", "tables")
-        os.makedirs(out_root, exist_ok=True)
         dirs = {t: os.path.join(events_dir, t) for t in cfg.tables}
         stats = bounded_sync_multi_fused(
             spark, dirs, out_root, ckpt,
             {t: to_stream_config(cfg) for t in cfg.tables})
         return {"out_path": out_root, "stats": stats}
     out_tables = os.path.join(data_dir, "out", "tables", "events")
-    os.makedirs(os.path.dirname(out_tables), exist_ok=True)
     stats = bounded_sync(spark, events_dir, out_tables, ckpt,
                          to_stream_config(cfg))
     return {"out_path": out_tables, "stats": stats}

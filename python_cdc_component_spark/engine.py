@@ -255,10 +255,8 @@ def _sync_tables(spark: SparkSession, frames: dict[str, DataFrame],
     from .operators.schema_align import align_to_schema
 
     state = state or RunState()
-    os.makedirs(out_dir, exist_ok=True)
     registry_path = os.path.join(out_dir, "schema.json")
-    registry = (SchemaRegistry.load(registry_path)
-                if os.path.exists(registry_path) else SchemaRegistry())
+    registry = SchemaRegistry.load(registry_path)
 
     planned: dict[str, DataFrame] = {}
     merged: dict[str, TableSchema] = {}
@@ -401,8 +399,12 @@ def sync_multi_fused(spark: SparkSession,
     A ``_table`` column in a frame is replaced by the dict key. A
     caller with one shared frame passes its ``_table`` slices. Returns
     the fused result frame (``_table`` column retained) per fingerprint
-    group.
+    group. The fused write is parquet only, so CSV tables are rejected.
     """
+    csv = sorted(t for t, cfg in cfgs.items() if cfg.output_format == "csv")
+    if csv:
+        raise ValueError(f"tables {csv} want output_format='csv', but a "
+                         "fused sync writes one parquet store")
     return _sync_tables(spark, {t: df.drop("_table")
                                 for t, df in events_by_table.items()},
                         out_dir, cfgs, state, fused=True)

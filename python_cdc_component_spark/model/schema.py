@@ -19,7 +19,10 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field
 
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
+
+from ..fs import fs_read_text, fs_write_text
 
 
 @dataclass
@@ -105,12 +108,12 @@ class SchemaRegistry:
         return merged
 
     def save(self, path: str) -> None:
-        with open(path, "w") as fh:
-            json.dump({name: ts.to_json() for name, ts in self.tables.items()},
-                      fh, indent=2, sort_keys=True)
+        fs_write_text(SparkSession.active(), path, json.dumps(
+            {name: ts.to_json() for name, ts in self.tables.items()},
+            indent=2, sort_keys=True))
 
     @classmethod
     def load(cls, path: str) -> "SchemaRegistry":
-        with open(path) as fh:
-            doc = json.load(fh)
-        return cls({name: TableSchema.from_json(d) for name, d in doc.items()})
+        raw = fs_read_text(SparkSession.active(), path)
+        return cls({name: TableSchema.from_json(d)
+                    for name, d in json.loads(raw or "{}").items()})

@@ -34,8 +34,10 @@ from pyspark.sql import Window
 from ...fs import fs_delete as _fs_delete
 from ...fs import fs_exists as _fs_exists
 from ...fs import fs_file_count as _fs_file_count
+from ...fs import fs_has_children as _fs_has_children
 from ...fs import fs_list_names as _fs_list_names
 from ...fs import fs_read_text as _fs_read_text
+from ...fs import fs_rename as _fs_rename
 from ...fs import fs_touch as _fs_touch
 from ...fs import fs_write_text as _fs_write_text
 
@@ -111,23 +113,9 @@ class IvfVectorIndex:
                 .withColumn(CELL_COL,
                             F.array_min(F.array(*structs))["k"]))
 
-    def load_centroids(self,
-                       spark: SparkSession | None = None
+    def load_centroids(self, spark: SparkSession
                        ) -> list[list[float]] | None:
-        """The stored codebook, or None for a not-yet-built index.
-
-        Routed through the Hadoop-FS helpers (fs.py), NOT
-        ``os.path.exists``/``open``: on a non-local store (hdfs://,
-        s3a://) a local-path check silently reports absence, the caller
-        takes the fresh-build path, and a mode-overwrite ``build``
-        destroys the existing remote index (ADVICE r10). ``spark``
-        defaults to the active session."""
-        spark = spark or SparkSession.getActiveSession()
-        if spark is None:          # no JVM: pure-local fallback
-            if not os.path.exists(self._cent_path):
-                return None
-            with open(self._cent_path) as fh:
-                return json.load(fh)
+        """The stored codebook, or None for a not-yet-built index."""
         txt = _fs_read_text(spark, self._cent_path)
         return None if txt is None else json.loads(txt)
 
@@ -201,8 +189,7 @@ class IvfVectorIndex:
             # a later purge cannot silently skip legacy rows (ADVICE
             # r10, medium). One-off per index; crash-retryable
             # (delete → rebuild → marker, each step idempotent).
-            if _fs_exists(spark, self._vecmap_path):
-                _fs_delete(spark, self._vecmap_path)
+            _fs_delete(spark, self._vecmap_path)
             has_cells = any(
                 name.startswith(f"{CELL_COL}=")
                 for name in _fs_list_names(spark, self.index_path))
@@ -316,7 +303,6 @@ class IvfVectorIndex:
             # An index dir holding no visible cell partitions (fully
             # purged, or markers only) has nothing to scan — and the
             # scan would fail schema inference (ADVICE r11, medium)
-            from ...fs import fs_has_children as _fs_has_children
             if not _fs_has_children(spark, self.index_path,
                                     f"{CELL_COL}="):
                 return 0
@@ -407,9 +393,6 @@ class IvfVectorIndex:
         and the old-delete loses the markers but nothing else: replays
         of marker-less epochs converge (purge-then-add is idempotent,
         the documented pruning contract)."""
-        from ...fs import fs_has_children as _fs_has_children
-        from ...fs import fs_rename as _fs_rename
-
         tmp = self.index_path.rstrip("/") + "__rebuild"
         if self.recover(spark):
             return self.n_cells
@@ -437,15 +420,11 @@ class IvfVectorIndex:
         # horizon lost for that window. Copies cost one touch per
         # marker (empty files, ≤ann_marker_retain of them) and the
         # source stays authoritative until the swap's delete commits.
-        epochs_src = os.path.join(self.index_path, "_epochs")
-        if _fs_exists(spark, epochs_src):
-            from ...fs import fs_list_names as _fs_list_names
-            from ...fs import fs_touch as _fs_touch
-            for name in _fs_list_names(spark, epochs_src):
-                # digit names only: local FS writes .name.crc twins
-                if name.isdigit():
-                    _fs_touch(spark,
-                              os.path.join(tmp, "_epochs", name))
+        for name in _fs_list_names(
+                spark, os.path.join(self.index_path, "_epochs")):
+            # digit names only: local FS writes .name.crc twins
+            if name.isdigit():
+                _fs_touch(spark, os.path.join(tmp, "_epochs", name))
         # commit: the build above MATERIALIZED every row into the
         # sibling, so the source dir is no longer read
         _fs_delete(spark, self.index_path)
@@ -460,8 +439,6 @@ class IvfVectorIndex:
         rename: if the index dir is missing but a complete
         ``__rebuild`` sibling exists, rename it into place. Returns
         True if a recovery happened."""
-        from ...fs import fs_rename as _fs_rename
-
         tmp = self.index_path.rstrip("/") + "__rebuild"
         if (not _fs_exists(spark, self._cent_path)
                 and _fs_exists(spark,
@@ -482,8 +459,6 @@ class IvfVectorIndex:
         (the size-tiered compaction argument of the streaming LSH
         index, caller-scheduled because serving indexes batch their
         maintenance). Returns the number of cells compacted."""
-        if not _fs_exists(spark, self.index_path):
-            return 0
         over = []
         for name in _fs_list_names(spark, self.index_path):
             if not name.startswith(f"{CELL_COL}="):
@@ -502,13 +477,12 @@ class IvfVectorIndex:
         # the vecmap sidecar accretes one file per touched partition
         # per add_batch — fold it under the same threshold
         mover = []
-        if _fs_exists(spark, self._vecmap_path):
-            for name in _fs_list_names(spark, self._vecmap_path):
-                if not name.startswith(f"{VEC_PART_COL}="):
-                    continue
-                p = os.path.join(self._vecmap_path, name)
-                if _fs_file_count(spark, p) > file_threshold:
-                    mover.append(p)
+        for name in _fs_list_names(spark, self._vecmap_path):
+            if not name.startswith(f"{VEC_PART_COL}="):
+                continue
+            p = os.path.join(self._vecmap_path, name)
+            if _fs_file_count(spark, p) > file_threshold:
+                mover.append(p)
         if mover:
             mcur = (spark.read.option("basePath", self._vecmap_path)
                     .parquet(*mover)
@@ -551,8 +525,7 @@ class IvfVectorIndex:
         ``nprobe`` to compensate filter-thinned cells, the standard
         filtered-IVF recall trade (`embedding_filtered_ann` is the
         in-query twin)."""
-        with open(self._cent_path) as fh:
-            centroids = json.load(fh)
+        centroids = self.load_centroids(spark)
         rows = probes.select("qid", "qe").collect()
         cells_by_qid = {r["qid"]: self._probe_cells(r["qe"], centroids,
                                                     nprobe)

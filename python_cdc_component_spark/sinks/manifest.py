@@ -12,8 +12,10 @@ from __future__ import annotations
 
 import json
 
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from ..fs import fs_write_text
 from ..model.schema import TableSchema
 from ..model.types import BaseType, MAX_STRING_LENGTH
 
@@ -62,8 +64,8 @@ def build_manifest(table: TableSchema, incremental: bool,
 def write_manifest(table: TableSchema, path: str, incremental: bool,
                    destination: str | None = None) -> dict:
     doc = build_manifest(table, incremental, destination)
-    with open(path, "w") as fh:
-        json.dump(doc, fh, indent=2, sort_keys=True)
+    fs_write_text(SparkSession.active(), path,
+                  json.dumps(doc, indent=2, sort_keys=True))
     return doc
 
 
@@ -297,6 +299,5 @@ def write_legacy_manifest(table: TableSchema, path: str,
                                 incremental=incremental,
                                 system_columns=False,
                                 write_always=write_always)
-    with open(path, "w") as fh:
-        json.dump(doc, fh)
+    fs_write_text(SparkSession.active(), path, json.dumps(doc))
     return doc

@@ -132,10 +132,7 @@ class MergeCompactor:
     def _resolve_buckets(self, spark: SparkSession) -> int:
         """Layout-resolved bucket count: the stored N wins over the
         constructor arg; a legacy store (no meta) gets the current N
-        persisted on first contact. Meta I/O goes through the Hadoop
-        FS API like every data path — on hdfs://\u2009/\u2009s3a:// a local
-        ``open()`` would never find the file and the layout-pinning
-        guard would silently do nothing."""
+        persisted on first contact."""
         raw = _fs_read_text(spark, self._meta_path())
         if raw is not None:
             self.num_buckets = int(json.loads(raw)["num_buckets"])

@@ -14,6 +14,10 @@ import base64
 import json
 from dataclasses import dataclass, field
 
+from pyspark.sql import SparkSession
+
+from ..fs import fs_read_text, fs_write_text
+
 
 @dataclass
 class RunState:
@@ -44,13 +48,13 @@ class RunState:
                    previous_mode=doc.get("previous_mode"))
 
     def save(self, path: str) -> None:
-        with open(path, "w") as fh:
-            json.dump(self.to_doc(), fh, indent=2, sort_keys=True)
+        fs_write_text(SparkSession.active(), path,
+                      json.dumps(self.to_doc(), indent=2, sort_keys=True))
 
     @classmethod
     def load(cls, path: str) -> "RunState":
-        with open(path) as fh:
-            return cls.from_doc(json.load(fh))
+        raw = fs_read_text(SparkSession.active(), path)
+        return cls() if raw is None else cls.from_doc(json.loads(raw))
 
     # -- reference-format interop (K5/K6 parity) ------------------------
     # The reference state doc (``ex_mysql_cdc/src/component.py:488-509``

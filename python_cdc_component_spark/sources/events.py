@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..fs import fs_parquet_time_unit
 from ..model.envelope import SYSTEM_COLUMNS as SC
 
 PAYLOAD_COLS = ["user_id", "event_type", "value", "props"]
@@ -49,42 +50,14 @@ EVENTS_RAW_SCHEMA = T.StructType([
     T.StructField("props", T.StringType()),
 ])
 
-_UNIT_TO_NS = {"s": 1_000_000_000, "ms": 1_000_000, "us": 1_000, "ns": 1}
-
 
 def ts_to_ns_factor(events_path: str) -> int:
-    """Multiplier from the file's raw INT64 ``ts`` to epoch-nanos, read
-    from the parquet footer.  Plain INT64 (no logical type — e.g. test
-    fixtures written from a ``ts_ns`` long column) is taken as nanos.
-    Footer reads are a driver-side metadata peek (one file), never a
-    data scan — safe at any scale."""
-    import glob
-    import os
-
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:
-        # no footer probe possible — warn loudly instead of silently
-        # guessing: a MICROS fixture read as nanos is the exact 1000×
-        # corruption the round-3 regression matrix exists to prevent
-        import warnings
-        warnings.warn(
-            f"pyarrow unavailable: cannot probe the timestamp unit of "
-            f"{events_path}; assuming raw INT64 nanos", stacklevel=2)
-        return 1
-    p = events_path
-    if os.path.isdir(p):
-        cands = sorted(
-            glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True))
-        if not cands:
-            return 1                    # empty stream dir: nothing staged
-        p = cands[0]
-    if not os.path.exists(p):
-        return 1            # Spark's reader will raise its own not-found
-    # a path that EXISTS but has an unreadable footer must raise — a
-    # corrupt file silently treated as nanos is undetectable downstream
-    typ = pq.read_schema(p).field("ts").type
-    return _UNIT_TO_NS[getattr(typ, "unit", "ns")]
+    """Multiplier from the raw INT64 ``ts`` to epoch-nanos, read from a
+    parquet footer through the Hadoop FS (a ``file://`` path probes like
+    a local one). Plain INT64, an empty dir and a missing path are taken
+    as nanos; a corrupt footer raises rather than pass for nanos."""
+    unit = fs_parquet_time_unit(SparkSession.active(), events_path, "ts")
+    return {"MILLIS": 1_000_000, "MICROS": 1_000}.get(unit, 1)
 
 
 def _normalize_ts(raw: DataFrame, factor: int) -> DataFrame:

@@ -1182,8 +1182,6 @@ class StreamingDedupGroups:
         listings (one py4j call each × up to num_buckets dirs × two
         tables × every batch otherwise — the docmap-gate lesson)."""
         from ..fs import fs_total_file_count as _fs_total
-        if not _fs_exists(spark, base):
-            return 0
         names = [name for name in _fs_list_names(spark, base)
                  if name.startswith(f"{part_col}=")]
         if not names or (_fs_total(spark, base)

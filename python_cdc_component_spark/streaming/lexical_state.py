@@ -448,8 +448,6 @@ class StreamingLexicalIndex:
                 (self.postings_path, TERM_PART_COL, False),
                 (self.docstats_path, DOC_PART_COL, False),
                 (self._docterms_path, DOC_PART_COL, True)):
-            if not _fs_exists(spark, base):
-                continue
             from ..fs import fs_file_count as _fs_file_count
             due = [name for name in _fs_list_names(spark, base)
                    if name.startswith(f"{part_col}=")

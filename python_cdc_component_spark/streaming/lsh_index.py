@@ -928,8 +928,6 @@ class StreamingLshIndex:
         (a torn overwrite could lose rows; duplicate rows are benign
         under the readers' ``distinct()``)."""
         from ..fs import fs_total_file_count as _fs_total
-        if not _fs_exists(spark, base):
-            return 0
         names = [n for n in _fs_list_names(spark, base)
                  if n.startswith(f"{GROUP_PART_COL}=")]
         if not names or (_fs_total(spark, base)
@@ -1204,8 +1202,6 @@ class StreamingLshIndex:
         files total, still amortized O(1) per batch. One Spark job
         folds all due partitions."""
         from ..fs import fs_total_file_count as _fs_total
-        if not _fs_exists(spark, self._docmap_path):
-            return 0
         names = [n for n in _fs_list_names(spark, self._docmap_path)
                  if n.startswith(f"{DOC_PART_COL}=")]
         if not names or (_fs_total(spark, self._docmap_path)

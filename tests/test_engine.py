@@ -66,7 +66,7 @@ def test_manifest_base_types():
     assert bases["s"]["type"] == "STRING"
 
 
-def test_state_offset_b64_roundtrip(tmp_path):
+def test_state_offset_b64_roundtrip(spark, tmp_path):
     st = RunState(offsets={"t": {"ts": 5, "file": "f", "pos": 9}})
     p = str(tmp_path / "state.json")
     st.save(p)

@@ -63,7 +63,7 @@ def test_merge_schemas_keeps_dropped_columns_nullable():
     assert by_name["id"].nullable is False
 
 
-def test_registry_roundtrip(tmp_path):
+def test_registry_roundtrip(spark, tmp_path):
     reg = SchemaRegistry()
     reg.update(TableSchema(
         "t1",
