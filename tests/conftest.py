@@ -14,7 +14,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus="8")
+    # Four cores: more local slots than a 4-core host has only adds
+    # per-task overhead to the suite's many small jobs. The codegen
+    # cache default (100 entries) is far below the number of plan
+    # shapes the suite runs, so each micro-batch of a streaming test
+    # recompiled the same generated classes (667 Janino compiles in
+    # one r9 collapse test, 289 with the larger cache).
+    s = get_spark("tests", cpus="4",
+                  extra_conf={"spark.sql.codegen.cache.maxEntries": "4096"})
     yield s
 
 
